@@ -183,279 +183,6 @@ def _bench_subprocess(cpus: int, n_docs: int) -> dict[str, float]:
     raise RuntimeError(f"bench subprocess failed: {out.stderr[-2000:]}")
 
 
-def zorder_ab() -> dict:
-    """A/B: does Z-order clustering in the checkpoint writer pay at read
-    time? Writes the same (c, r, payload) dataset twice via ResumableWriter
-    — order_by=zindex vs unordered — with small parquet row groups (the
-    100 TB shape: many row groups per file), then runs an identical
-    (c, r) window range-scan on both. Reports the stats-prunable row-group
-    fraction (parquet footer min/max vs the predicate, what any
-    stats-pruning scan engine skips) and the Spark wall time."""
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    from openeo_geotrellis_extensions_spark.operators.spatial_join import zindex_col
-    from openeo_geotrellis_extensions_spark.runtime.checkpoint import ResumableWriter
-
-    spark = build_spark(CPUS)
-    # small row groups => many groups per bucket file, the 100 TB shape
-    # (must go on the Hadoop conf: session conf is ignored by the writer)
-    spark.sparkContext._jsc.hadoopConfiguration().set(
-        "parquet.block.size", str(256 * 1024)
-    )
-    base = tempfile.mkdtemp(prefix="bench_zorder_")
-    try:
-        n = 4_000_000
-        df = (
-            spark.range(n)
-            .select(
-                (F.pmod(F.xxhash64("id"), F.lit(4096))).cast("int").alias("c"),
-                (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(4096))).cast("int").alias("r"),
-                F.col("id").alias("payload"),
-            )
-            .withColumn("z", zindex_col(F.col("c"), F.col("r")))
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64("payload", F.lit(2)), F.lit(8)).cast("string")
-            )
-        )
-        outs = {}
-        for name, order in [("zordered", ("z",)), ("unordered", ())]:
-            out = f"{base}/{name}"
-            ResumableWriter(out, order_by=order).run(df)
-            outs[name] = out
-
-        # predicate: a 256x256 window = (1/16)^2 of the key space
-        lo, hi = 1024, 1279
-        pred = (
-            f"c BETWEEN {lo} AND {hi} AND r BETWEEN {lo} AND {hi}"
-        )
-        report = {}
-        for name, out in outs.items():
-            groups = total = 0
-            for root, _d, files in os.walk(out):
-                for fn in files:
-                    if not fn.endswith(".parquet"):
-                        continue
-                    md = pq.ParquetFile(os.path.join(root, fn)).metadata
-                    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-                    for g in range(md.num_row_groups):
-                        rg = md.row_group(g)
-                        total += 1
-                        sc = rg.column(idx["c"]).statistics
-                        sr = rg.column(idx["r"]).statistics
-                        if sc.max < lo or sc.min > hi or sr.max < lo or sr.min > hi:
-                            groups += 1  # prunable by stats
-            # warm + timed scan
-            q = lambda: spark.read.parquet(out).where(pred).agg(  # noqa: E731
-                F.count("*"), F.sum("payload")
-            ).collect()
-            q()
-            t0 = time.time()
-            for _ in range(3):
-                q()
-            report[name] = {
-                "row_groups": total,
-                "prunable": groups,
-                "prunable_frac": round(groups / max(1, total), 4),
-                "scan_sec_3x": round(time.time() - t0, 3),
-            }
-        return report
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        spark.stop()
-
-
-def skew_ab() -> dict:
-    """A/B: salting under a pathological hot cell (90% of rows in ONE cell).
-    Identical input written via ResumableWriter with bucket=cell (unsalted:
-    one task carries 90% of the write) vs bucket=cell_salt (with_salt
-    spreads the hot cell). Reports wall seconds for each."""
-    import shutil
-    import tempfile
-
-    from openeo_geotrellis_extensions_spark.runtime.checkpoint import ResumableWriter
-    from openeo_geotrellis_extensions_spark.runtime.skew import with_salt
-
-    spark = build_spark(CPUS)
-    base = tempfile.mkdtemp(prefix="bench_skew_")
-    try:
-        n = 4_000_000
-        # 90% of rows land in cell 0; the rest spread over 63 cold cells
-        df = spark.range(n).select(
-            F.col("id").cast("string").alias("doc_id"),
-            F.when(F.pmod(F.xxhash64("id"), F.lit(10)) < 9, F.lit(0))
-            .otherwise(F.pmod(F.xxhash64("id", F.lit(1)), F.lit(63)) + 1)
-            .cast("int")
-            .alias("cell"),
-            F.sha2(F.col("id").cast("string"), 256).alias("payload"),
-        )
-        report = {}
-        for name in ["unsalted", "salted"]:
-            if name == "salted":
-                d = with_salt(df, "cell", "doc_id", target_rows_per_salt=150_000)
-                d = d.withColumn(
-                    "bucket", F.concat_ws("_", F.col("cell"), F.col("salt"))
-                )
-            else:
-                d = df.withColumn("bucket", F.col("cell").cast("string"))
-            out = f"{base}/{name}"
-            t0 = time.time()
-            s = ResumableWriter(out).run(d)
-            report[name] = {
-                "wall_sec": round(time.time() - t0, 3),
-                "buckets": s["written"],
-            }
-        report["speedup"] = round(
-            report["unsalted"]["wall_sec"] / report["salted"]["wall_sec"], 2
-        )
-        return report
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        spark.stop()
-
-
-def simhash_ab() -> dict:
-    """A/B for the r4 perf-weak fix: SimHash pigeonhole band-key width.
-    32-bit signatures at radius 3 give 8-bit band keys (256 distinct values
-    per band -> the candidate equi-join degenerates toward N^2/256); 64-bit
-    give 16-bit keys. Reports candidate-pair volume and wall seconds for
-    both widths over the real documents table, plus the surviving
-    (verified) pair counts — recall is guaranteed within the radius at ANY
-    width, so survivors differ only because the wider signature separates
-    non-near docs better."""
-    from openeo_geotrellis_extensions_spark.pipeline.dedup import (
-        simhash_band_candidates,
-        simhash_near_pairs,
-    )
-
-    spark = build_spark(CPUS)
-    try:
-        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").cache()
-        n_docs = docs.count()
-        report: dict = {"n_docs": n_docs}
-        for bits in (32, 64):
-            t0 = time.time()
-            cand = simhash_band_candidates(docs, max_hamming=3, bits=bits).count()
-            pairs = simhash_near_pairs(docs, max_hamming=3, bits=bits).count()
-            report[f"bits{bits}"] = {
-                "candidates": cand,
-                "verified_pairs": pairs,
-                "wall_sec": round(time.time() - t0, 3),
-            }
-        report["candidate_reduction"] = round(
-            report["bits32"]["candidates"] / max(1, report["bits64"]["candidates"]), 1
-        )
-        return report
-    finally:
-        spark.stop()
-
-
-def rangejoin_ab() -> dict:
-    """A/B: bucketed interval join (operators/asof.py:interval_point_join)
-    vs the raw inequality join Spark plans as a BroadcastNestedLoopJoin.
-    KEYLESS global intervals make the comparison honest — with an equality
-    key Spark would equi-join and post-filter, hiding the theta-join cost.
-    points x intervals = |events| * 2000 predicate evaluations for the raw
-    plan; the bucketed plan touches each point once and each interval
-    span/width times. Same result set asserted."""
-    from openeo_geotrellis_extensions_spark.operators.asof import (
-        interval_point_join,
-    )
-
-    spark = build_spark(CPUS)
-    try:
-        ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
-            "event_id", "ts"
-        )
-        base = 1704067200  # 2024-01-01T00:00:00Z
-        iv = spark.range(2000).select(
-            F.col("id").alias("interval_id"),
-            F.timestamp_seconds(
-                F.lit(base) + (F.col("id") * 337 % 700) * 3600
-            ).alias("start"),
-            F.timestamp_seconds(
-                F.lit(base)
-                + ((F.col("id") * 337 % 700) + F.col("id") % 5 + 1) * 3600
-            ).alias("end"),
-        )
-        report = {}
-        counts = {}
-        for name in ("theta", "bucketed", "theta2", "bucketed2"):
-            t0 = time.time()
-            if name.startswith("theta"):
-                n = ev.join(
-                    iv,
-                    (F.col("ts") >= F.col("start")) & (F.col("ts") < F.col("end")),
-                ).count()
-            else:
-                n = interval_point_join(ev, iv, on=[]).count()
-            counts[name] = n
-            report[name] = round(time.time() - t0, 3)
-        assert counts["theta"] == counts["bucketed"], counts
-        out = {
-            "theta_sec": min(report["theta"], report["theta2"]),
-            "bucketed_sec": min(report["bucketed"], report["bucketed2"]),
-            "rows": counts["bucketed"],
-        }
-        out["speedup"] = round(out["theta_sec"] / out["bucketed_sec"], 2)
-        return out
-    finally:
-        spark.stop()
-
-
-def ckpt_overhead_ab() -> dict:
-    """A/B: what does checkpoint-resumability COST? The identical 4M-row
-    bucketed dataset written (a) bare: repartition(bucket) +
-    write.partitionBy, and (b) through ResumableWriter (adds the done-set
-    read, count, file-listing diff, and the commit publication). Reports
-    wall seconds for each — the delta is the price of resume + lineage."""
-    import shutil
-    import tempfile
-
-    from openeo_geotrellis_extensions_spark.runtime.checkpoint import ResumableWriter
-
-    spark = build_spark(CPUS)
-    base = tempfile.mkdtemp(prefix="bench_ckpt_ovh_")
-    try:
-        n = 4_000_000
-        df = spark.range(n).select(
-            F.col("id"),
-            F.sha2(F.col("id").cast("string"), 256).alias("payload"),
-            F.pmod(F.xxhash64("id"), F.lit(64)).cast("string").alias("bucket"),
-        )
-        # alternate A B A B (fresh out dirs) and take min per variant: the
-        # first write of a session pays JVM/codegen warmup whoever runs it
-        times: dict[str, list[float]] = {"bare": [], "resumable": []}
-        for rep in range(2):
-            for name in ["bare", "resumable"]:
-                out = f"{base}/{name}_{rep}"
-                t0 = time.time()
-                if name == "bare":
-                    (
-                        df.repartition(F.col("bucket"))
-                        .write.mode("append")
-                        .partitionBy("bucket")
-                        .parquet(out)
-                    )
-                else:
-                    ResumableWriter(out).run(df)
-                times[name].append(round(time.time() - t0, 3))
-        report = {
-            "bare": min(times["bare"]),
-            "resumable": min(times["resumable"]),
-            "all_trials": times,
-        }
-        report["overhead_pct"] = round(
-            (report["resumable"] / report["bare"] - 1.0) * 100.0, 1
-        )
-        return report
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-        spark.stop()
-
-
 def main() -> None:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     import duckdb
@@ -465,21 +192,6 @@ def main() -> None:
     ).fetchone()[0]
     n_docs = n_rows * DOCS_MULTIPLIER
 
-    if "--ckpt-overhead-ab" in sys.argv:
-        print(json.dumps({"ckpt_overhead_ab": ckpt_overhead_ab()}))
-        return
-    if "--simhash-ab" in sys.argv:
-        print(json.dumps({"simhash_ab": simhash_ab()}))
-        return
-    if "--rangejoin-ab" in sys.argv:
-        print(json.dumps({"rangejoin_ab": rangejoin_ab()}))
-        return
-    if "--zorder-ab" in sys.argv:
-        print(json.dumps({"zorder_ab": zorder_ab()}))
-        return
-    if "--skew-ab" in sys.argv:
-        print(json.dumps({"skew_ab": skew_ab()}))
-        return
     if "--scaling" in sys.argv:
         lo = int(os.environ.get("SPARK_GRAFT_SCALE_LO", "2"))
         hi = int(os.environ.get("SPARK_GRAFT_SCALE_HI", "8"))

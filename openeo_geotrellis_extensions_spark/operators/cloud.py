@@ -31,7 +31,7 @@ def to_scl_dilation_mask(
     dilation_px: int = 2,
 ) -> DataCube:
     """SCL band -> binary mask (1 = masked) dilated by ``dilation_px``.
-    Dilation = (binary mask convolved with a box kernel) > 0 — the
+    Dilation = (binary mask convolved with a box kernel) >= 1 — the
     convolution-based morphology of CloudFilterStrategy. The result plugs
     straight into operators.mask.mask()."""
     # membership test per pixel: 1 if scl in mask_values else 0
@@ -67,7 +67,9 @@ def to_scl_dilation_mask(
             out = []
             for bufs in pdf["bands"]:
                 stack = decode_tile_float(list(bufs), conv_ct, shape)
-                m = (np.nan_to_num(stack[0], nan=0.0) > 0).astype(np.float64)
+                # box counts of a 0/1 mask are whole numbers; 0.5 (not 0)
+                # rejects the FFT path's ~1e-15 round-off on clear pixels
+                m = (np.nan_to_num(stack[0], nan=0.0) > 0.5).astype(np.float64)
                 out.append([encode_band(out_ct.from_float_nan(m), out_ct)])
             res = pdf.copy()
             res["bands"] = out

@@ -1,16 +1,17 @@
-"""apply_kernel — focal convolution with tile halos.
+"""apply_kernel — focal convolution with tile halos — and ``halo_map``, the
+one halo exchange behind apply_kernel, apply_neighborhood and bilinear
+resample_spatial.
 
 Reference: ``apply_kernel`` (OpenEOProcesses.scala:1101-1130) buffers tiles
-(focal/MultibandFocalOperation.scala:30-57) and convolves per band, with an
-FFT path for kernels > 10 px (geotrellis-common/.../FFTConvolve.scala).
+(focal/MultibandFocalOperation.scala:30-57, the bufferTiles all three use)
+and convolves per band, with an FFT path for kernels > 10 px
+(geotrellis-common/.../FFTConvolve.scala).
 
 Ours: the halo is an 8-neighbor self-join expressed as a 9-way offset explode
 (pure column ops — each tile row emits one row per neighbor key it
-contributes to) followed by ``groupBy(key).applyInPandas`` that assembles the
-3x3 padded array and convolves. Shuffle volume = 9x tiles, the same cost
-shape as the reference's bufferTiles. Direct convolution via
-sliding_window_view for small kernels, numpy FFT above 10 px (the
-reference's threshold).
+contributes to) followed by ``groupBy(key).applyInPandas`` that writes each
+neighbor's edge slice into a padded window. Shuffle volume = 9x tiles, the
+same cost shape as the reference's bufferTiles.
 
 Nodata semantics: NaN inputs contribute 0 to neighbor sums, and output pixels
 whose center input was NaN stay NaN (Geotrellis focal nodata convention).
@@ -18,10 +19,11 @@ whose center input was NaN stay NaN (Geotrellis focal nodata convention).
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
@@ -44,17 +46,33 @@ def _convolve2d_same(arr: np.ndarray, kernel: np.ndarray) -> np.ndarray:
     return np.einsum("ijkl,kl->ij", win, kernel[::-1, ::-1])
 
 
-def apply_kernel(cube: DataCube, kernel, factor: float = 1.0) -> DataCube:
-    kernel = np.asarray(kernel, dtype=np.float64)
-    kh, kw = kernel.shape
+def _halo_span(d: int, n: int, p: int) -> tuple[slice, slice]:
+    """(source, window) slices along one axis for the neighbor at offset
+    ``d`` of a tile of length ``n`` inside a window with halo ``p``."""
+    lo = p + d * n  # window index of the neighbor's first pixel
+    w0, w1 = max(lo, 0), min(lo + n, n + 2 * p)
+    return slice(w0 - lo, w1 - lo), slice(w0, w1)
+
+
+def halo_map(
+    cube: DataCube,
+    halo: tuple[int, int],
+    fn: Callable[[np.ndarray], list[bytes]],
+) -> DataFrame:
+    """Per tile, call ``fn(window)`` on a float64 ``(bands, h+2py, w+2px)``
+    window: the tile in the middle, ``halo=(py, px)`` pixels of its 8
+    neighbors around it, NaN where a neighbor is missing or off the layout.
+    ``fn`` returns the tile's encoded band list. -> the cube's keys + bands,
+    in the cube's schema; keys without a tile produce no row."""
+    py, px = halo
     h, w = cube.meta.tile_shape
-    if kh // 2 > h or kw // 2 > w:
-        raise ValueError("kernel halo exceeds tile size")
+    if py > h or px > w:
+        raise ValueError(f"halo {halo} exceeds tile size {(h, w)}")
     ct = cube.meta.cell_type
     n_bands = cube.meta.n_bands
-    out_ct = parse_cell_type("float32" if parse_cell_type(ct).base != "float64" else "float64")
     keys = cube.key_cols
-    time_keys = [k for k in keys if k != "col" and k != "row"]
+    time_keys = [k for k in keys if k not in ("col", "row")]
+    layout = cube.meta.layout
 
     # 9-way offset explode: each tile contributes to itself + 8 neighbors
     offsets = F.expr(
@@ -73,36 +91,45 @@ def apply_kernel(cube: DataCube, kernel, factor: float = 1.0) -> DataCube:
         "bands",
     ).where(
         (F.col("col") >= 0) & (F.col("row") >= 0)
-        & (F.col("col") < cube.meta.layout.layout_cols)
-        & (F.col("row") < cube.meta.layout.layout_rows)
+        & (F.col("col") < layout.layout_cols)
+        & (F.col("row") < layout.layout_rows)
     )
-
     out_schema = cube.df.schema
 
-    def convolve_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # assemble 3x3 padded neighborhood
-        padded = np.full((n_bands, 3 * h, 3 * w), np.nan)
-        center_present = False
-        for rec in pdf.itertuples(index=False):
-            dc, dr = int(rec.dc), int(rec.dr)
-            if dc == 0 and dr == 0:
-                center_present = True
-            stack = decode_tile_float(list(rec.bands), ct, (h, w))
-            padded[:, (dr + 1) * h : (dr + 2) * h, (dc + 1) * w : (dc + 2) * w] = stack
-        if not center_present:
+    def window_group(pdf: pd.DataFrame) -> pd.DataFrame:
+        if not ((pdf["dc"] == 0) & (pdf["dr"] == 0)).any():
             return pd.DataFrame(columns=list(out_schema.fieldNames()))
+        win = np.full((n_bands, h + 2 * py, w + 2 * px), np.nan)
+        for rec in pdf.itertuples(index=False):
+            sy, wy = _halo_span(int(rec.dr), h, py)
+            sx, wx = _halo_span(int(rec.dc), w, px)
+            win[:, wy, wx] = decode_tile_float(list(rec.bands), ct, (h, w))[:, sy, sx]
         first = pdf.iloc[0]
-        bands = []
-        for b in range(n_bands):
-            arr = padded[b]
-            nanmask = np.isnan(arr)
-            filled = np.where(nanmask, 0.0, arr)
-            conv = _convolve2d_same(filled, kernel) * factor
-            conv[nanmask] = np.nan  # center-nodata stays nodata
-            center = conv[h : 2 * h, w : 2 * w]
-            bands.append(encode_band(out_ct.from_float_nan(center), out_ct))
-        row = [first[k] for k in time_keys] + [int(first["col"]), int(first["row"]), bands]
+        row = [first[k] for k in time_keys] + [int(first["col"]), int(first["row"]), fn(win)]
         return pd.DataFrame([row], columns=time_keys + ["col", "row", "bands"])
 
-    df = exploded.groupBy(*keys).applyInPandas(convolve_group, schema=out_schema)
+    return exploded.groupBy(*keys).applyInPandas(window_group, schema=out_schema)
+
+
+def apply_kernel(cube: DataCube, kernel, factor: float = 1.0) -> DataCube:
+    kernel = np.asarray(kernel, dtype=np.float64)
+    kh, kw = kernel.shape
+    py, px = kh // 2, kw // 2
+    h, w = cube.meta.tile_shape
+    out_ct = parse_cell_type(
+        "float32" if parse_cell_type(cube.meta.cell_type).base != "float64" else "float64"
+    )
+
+    def convolve(win: np.ndarray) -> list[bytes]:
+        bands = []
+        for plane in win:
+            nanmask = np.isnan(plane)
+            conv = _convolve2d_same(np.where(nanmask, 0.0, plane), kernel) * factor
+            center = conv[py : py + h, px : px + w]
+            # center-nodata stays nodata
+            center[nanmask[py : py + h, px : px + w]] = np.nan
+            bands.append(encode_band(out_ct.from_float_nan(center), out_ct))
+        return bands
+
+    df = halo_map(cube, (py, px), convolve)
     return DataCube(df, cube.meta).with_meta(cell_type=out_ct.name)

@@ -8,10 +8,11 @@ Reference:
   - pyramid build: iterative zoom-out (TiledRasterLayer.scala:173,
     geotiff/package.scala:332-344).
 
-Ours reuses the kernel module's 9-way offset-explode halo (one shuffle),
-assembles the padded array, runs the callback on the interior+overlap
-window, then crops — halo pixels at partition boundaries are bit-exact
-because every neighbor tile ships its edge (SURVEY §7.3 'halo correctness').
+Ours runs the callback through ``operators.kernel.halo_map`` (the engine's
+one halo exchange: a 9-way offset explode, one shuffle) on the
+interior+overlap window, then crops — halo pixels at partition boundaries are
+bit-exact because every neighbor tile ships its edge (SURVEY §7.3 'halo
+correctness').
 Pyramid: 2x2 block mean per zoom-out, sparse keys preserved.
 """
 
@@ -26,6 +27,7 @@ from ..core.grid import LayoutDefinition
 from ..core.tiles import decode_tile_float, encode_band
 from ..functions.process_compiler import compile_process_graph
 from ..sources.datacube import CubeMeta, DataCube
+from .kernel import halo_map
 
 
 def apply_neighborhood(
@@ -39,11 +41,8 @@ def apply_neighborhood(
     tile (remove_overlap, OpenEOProcesses.scala:996-998). ``fn_or_graph`` may
     be a callable or an openEO process graph applied per band with 'x' =
     padded array."""
-    if overlap > min(cube.meta.tile_shape):
-        raise ValueError("overlap exceeds tile size")
     h, w = cube.meta.tile_shape
     ct = cube.meta.cell_type
-    n_bands = cube.meta.n_bands
     out_ct = parse_cell_type(
         "float64" if parse_cell_type(ct).base == "float64" else "float32"
     )
@@ -59,52 +58,14 @@ def apply_neighborhood(
                  for b in range(padded.shape[0])]
             )
 
-    keys = cube.key_cols
-    time_keys = [k for k in keys if k not in ("col", "row")]
-    offsets = F.expr(
-        "explode(array(" + ", ".join(
-            f"struct({dc} as dc, {dr} as dr)" for dr in (-1, 0, 1) for dc in (-1, 0, 1)
-        ) + "))"
-    )
-    exploded = cube.df.select(*time_keys, "col", "row", "bands", offsets.alias("o")).select(
-        *time_keys,
-        (F.col("col") + F.col("o.dc")).alias("col"),
-        (F.col("row") + F.col("o.dr")).alias("row"),
-        (-F.col("o.dc")).alias("dc"),
-        (-F.col("o.dr")).alias("dr"),
-        "bands",
-    ).where(
-        (F.col("col") >= 0) & (F.col("row") >= 0)
-        & (F.col("col") < cube.meta.layout.layout_cols)
-        & (F.col("row") < cube.meta.layout.layout_rows)
-    )
-
-    out_schema = cube.df.schema
-
-    def apply_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        padded = np.full((n_bands, 3 * h, 3 * w), np.nan)
-        center = False
-        for rec in pdf.itertuples(index=False):
-            dc, dr = int(rec.dc), int(rec.dr)
-            if dc == 0 and dr == 0:
-                center = True
-            stack = decode_tile_float(list(rec.bands), ct, (h, w))
-            padded[:, (dr + 1) * h : (dr + 2) * h, (dc + 1) * w : (dc + 2) * w] = stack
-        if not center:
-            return pd.DataFrame(columns=list(out_schema.fieldNames()))
-        first = pdf.iloc[0]
-        win = padded[:, h - overlap : 2 * h + overlap, w - overlap : 2 * w + overlap]
+    def apply_window(win: np.ndarray) -> list[bytes]:
         res = np.asarray(user_fn(win), dtype=np.float64)
         if res.shape != win.shape:
             raise ValueError(f"neighborhood fn changed shape {win.shape} -> {res.shape}")
         core = res[:, overlap : overlap + h, overlap : overlap + w]
-        bands = [
-            encode_band(out_ct.from_float_nan(core[b]), out_ct) for b in range(n_bands)
-        ]
-        row = [first[k] for k in time_keys] + [int(first["col"]), int(first["row"]), bands]
-        return pd.DataFrame([row], columns=time_keys + ["col", "row", "bands"])
+        return [encode_band(out_ct.from_float_nan(band), out_ct) for band in core]
 
-    df = exploded.groupBy(*keys).applyInPandas(apply_group, schema=out_schema)
+    df = halo_map(cube, (overlap, overlap), apply_window)
     return DataCube(df, cube.meta).with_meta(cell_type=out_ct.name)
 
 

@@ -13,6 +13,9 @@ shuffle. Nearest-neighbor sampling; CRS warping (EPSG:4326 <-> EPSG:3857
 and WGS84 UTM zones, core/proj.py) runs through the same fragment step by
 forward-projecting the source footprint and inverse-projecting the 2-D grid
 of target pixel centers.
+Bilinear first pads each tile with a one-pixel halo via
+``operators.kernel.halo_map`` (NaN past missing neighbors -> weights
+renormalize), the halo exchange apply_kernel and apply_neighborhood share.
 Negative/out-of-grid keys are filtered like filterNegativeSpatialKeys
 (OpenEOProcesses.scala:804-830).
 """
@@ -30,6 +33,7 @@ from ..core.celltype import parse_cell_type
 from ..core.grid import LayoutDefinition
 from ..core.tiles import decode_tile_float, encode_band
 from ..sources.datacube import CubeMeta, DataCube, cube_schema
+from .kernel import halo_map
 
 
 def resample_spatial(
@@ -71,7 +75,9 @@ def resample_spatial(
     temporal = cube.meta.temporal
     frag_schema = cube_schema(temporal)
     bilinear = method == "bilinear"
-    src_df = _pad_one_pixel(cube) if bilinear else cube.df
+    src_df = cube.df
+    if bilinear:  # raw (h+2, w+2) float64 planes: 2x2 neighborhoods stay local
+        src_df = halo_map(cube, (1, 1), lambda win: [pl.tobytes() for pl in win])
 
     def fragments(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         th, tw = target.tile_rows, target.tile_cols
@@ -80,7 +86,7 @@ def resample_spatial(
             for rec in pdf.itertuples(index=False):
                 c, r = int(rec.col), int(rec.row)
                 if bilinear:
-                    # padded (h+2, w+2) float64 planes from _pad_one_pixel
+                    # padded (h+2, w+2) float64 planes from halo_map
                     pad_shape = (shape[0] + 2, shape[1] + 2)
                     stack = np.stack(
                         [
@@ -335,61 +341,6 @@ def _resample_aggregate(
     merged = frags.groupBy(*keys).applyInPandas(merge_partials, schema=out_schema)
     meta = CubeMeta(target, out_ct.name, cube.meta.band_names, temporal)
     return DataCube(merged, meta)
-
-
-def _pad_one_pixel(cube: DataCube) -> "DataFrame":
-    """One-pixel halo exchange for bilinear warping: the kernel module's
-    9-way offset explode (one shuffle) assembles each tile's 8 neighbors and
-    crops a (h+2, w+2) float64 padded plane per band — so border pixels'
-    2x2 bilinear neighborhoods are always local (TileRDDReproject buffers
-    tiles the same way before resampling). Missing neighbors stay NaN
-    (layout edge -> weight renormalization)."""
-    from pyspark.sql import functions as F
-
-    ct = cube.meta.cell_type
-    n_bands = cube.meta.n_bands
-    h, w = cube.meta.tile_shape
-    keys = cube.key_cols
-    time_keys = [k for k in keys if k not in ("col", "row")]
-    offsets = F.expr(
-        "explode(array(" + ", ".join(
-            f"struct({dc} as dc, {dr} as dr)" for dr in (-1, 0, 1) for dc in (-1, 0, 1)
-        ) + "))"
-    )
-    exploded = cube.df.select(
-        *time_keys, "col", "row", "bands", offsets.alias("o")
-    ).select(
-        *time_keys,
-        (F.col("col") + F.col("o.dc")).alias("col"),
-        (F.col("row") + F.col("o.dr")).alias("row"),
-        (-F.col("o.dc")).alias("dc"),
-        (-F.col("o.dr")).alias("dr"),
-        "bands",
-    ).where(
-        (F.col("col") >= 0) & (F.col("row") >= 0)
-        & (F.col("col") < cube.meta.layout.layout_cols)
-        & (F.col("row") < cube.meta.layout.layout_rows)
-    )
-    out_schema = cube.df.schema
-
-    def pad_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        big = np.full((n_bands, 3 * h, 3 * w), np.nan)
-        center = False
-        for rec in pdf.itertuples(index=False):
-            dc, dr = int(rec.dc), int(rec.dr)
-            if dc == 0 and dr == 0:
-                center = True
-            stack = decode_tile_float(list(rec.bands), ct, (h, w))
-            big[:, (dr + 1) * h : (dr + 2) * h, (dc + 1) * w : (dc + 2) * w] = stack
-        if not center:
-            return pd.DataFrame(columns=list(out_schema.fieldNames()))
-        first = pdf.iloc[0]
-        padded = big[:, h - 1 : 2 * h + 1, w - 1 : 2 * w + 1]
-        bands = [padded[b].astype(np.float64).tobytes() for b in range(n_bands)]
-        row = [first[k] for k in time_keys] + [int(first["col"]), int(first["row"]), bands]
-        return pd.DataFrame([row], columns=time_keys + ["col", "row", "bands"])
-
-    return exploded.groupBy(*keys).applyInPandas(pad_group, schema=out_schema)
 
 
 def retile(cube: DataCube, tile_cols: int, tile_rows: int) -> DataCube:

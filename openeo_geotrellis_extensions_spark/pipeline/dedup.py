@@ -562,7 +562,8 @@ def connected_components(
     via iterative min-label propagation (the scalable alternative to a
     driver-side union-find; converges in O(diameter) join rounds, each a
     plain shuffle join). -> (id, component) where component = min id in the
-    component."""
+    component. Raises RuntimeError if the labels have not converged after
+    ``max_iters`` rounds."""
     edges = (
         pairs.selectExpr("id_a AS a", "id_b AS b")
         .unionByName(pairs.selectExpr("id_b AS a", "id_a AS b"))
@@ -614,6 +615,12 @@ def connected_components(
         labels = ckpt.drop("_old")
         if changed == 0:
             break
+    else:
+        edges.unpersist()
+        raise RuntimeError(
+            f"connected_components did not converge in max_iters={max_iters} "
+            "rounds (a component's diameter exceeds the round limit)"
+        )
     # labels is checkpointed, so the cached edges are no longer reachable —
     # release them (mirrors the pts.unpersist() pattern in knn_join)
     edges.unpersist()

@@ -61,6 +61,29 @@ def test_scl_dilation_mask(spark):
     assert (got[exp == 0] == 10).all()
 
 
+def test_scl_dilation_mask_fft_path_exact(spark):
+    """dilation_px=5 -> an 11x11 box kernel, which takes the FFT path: one
+    cloud pixel must mask exactly its 11x11 square clipped to the plane —
+    FFT round-off on clear pixels must not leak into the mask."""
+    def scl_fn(d, b, c, r, py, px):
+        v = np.full(np.broadcast(px, py).shape, 4.0)
+        if c == 1 and r == 0:
+            v = v.copy()
+            v[(py == 2) & (px == 4)] = 9.0  # global (row 2, col 12)
+        return v
+
+    scl = arithmetic_cube(spark, LAYOUT, dates=DATES[:1], n_bands=1,
+                          cell_type="uint8ud255", value_fn=scl_fn)
+    m = to_scl_dilation_mask(scl, dilation_px=5)
+    full = np.full((16, 16), -1.0)
+    for r in m.df.collect():
+        full[r.row * 8:(r.row + 1) * 8, r.col * 8:(r.col + 1) * 8] = \
+            decode_tile_float(list(r.bands), m.meta.cell_type, (8, 8))[0]
+    exp = np.zeros((16, 16))
+    exp[0:8, 7:16] = 1.0  # rows -3..7, cols 7..17 clipped to the plane
+    np.testing.assert_array_equal(full, exp)
+
+
 def test_chunk_polygon_scales_inside(spark):
     cube = constant_cube(spark, LAYOUT, band_values=[10], cell_type="uint8ud255")
     feats = spark.createDataFrame(
@@ -112,6 +135,17 @@ def test_connected_components_vs_unionfind(spark):
     assert got == exp
     # {1,2,3,8,9,10} one component, {5,6} another
     assert got[10] == 1 and got[6] == 5
+
+
+def test_connected_components_raises_when_unconverged(spark):
+    """A 60-node chain needs more label-propagation rounds than the default
+    limit; returning the partial labels (39 'components') would be silently
+    wrong, so it must raise instead."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(59)], ["id_a", "id_b"]
+    )
+    with pytest.raises(RuntimeError, match="max_iters=20"):
+        connected_components(pairs).collect()
 
 
 def test_array_find_modify():

@@ -103,14 +103,22 @@ def test_convolve_fft_matches_direct():
     np.testing.assert_allclose(direct[4:-4, 4:-4], fft[4:-4, 4:-4], atol=1e-9)
 
 
-def test_apply_kernel_cross_tile_halo(spark):
-    """Mean 3x3 kernel across the whole plane == per-tile conv with halos:
-    values at tile boundaries must match the global convolution."""
+@pytest.mark.parametrize(
+    "k",
+    [
+        np.full((3, 3), 1.0 / 9),
+        np.array([[1.0, 2.0, 3.0, 4.0, 5.0]]),  # non-square: no vertical halo
+        np.arange(16.0).reshape(4, 4) / 10,  # even: asymmetric halo use
+    ],
+    ids=["mean3x3", "1x5", "4x4"],
+)
+def test_apply_kernel_cross_tile_halo(spark, k):
+    """Kernel across the whole plane == per-tile conv with halos: values at
+    tile boundaries must match the global convolution."""
     cube = arithmetic_cube(
         spark, LAYOUT, dates=DATES[:1], n_bands=1,
         value_fn=lambda d, b, c, r, py, px: ((px * 3 + py * 5 + c * 13 + r * 7) % 17).astype(np.float64),
     )  # no nodata for a clean oracle
-    k = np.full((3, 3), 1.0 / 9)
     out = apply_kernel(cube, k)
     got = _world_pixels(out)
     plane = _world_pixels(cube)

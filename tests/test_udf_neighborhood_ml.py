@@ -106,6 +106,43 @@ def test_apply_neighborhood_equals_global_conv(spark):
     np.testing.assert_allclose(got[1:-1, 1:-1], exp[1:-1, 1:-1], rtol=1e-5)
 
 
+def test_apply_neighborhood_overlap2_missing_tile(spark):
+    """overlap=2 on a 3x3 layout with the middle tile dropped: a fn that
+    shifts the window by the overlap (band 0 down-right, band 1 up-left)
+    must reproduce the global mosaic shifted the same way — neighbors read
+    NaN where the dropped tile was, and the dropped key stays absent."""
+    o = 2
+    layout = LayoutDefinition(Extent(0.0, 0.0, 3.0, 3.0), 3, 3, 8, 8)
+    cube = arithmetic_cube(
+        spark, layout, dates=DATES[:1], n_bands=2, cell_type="float64",
+        value_fn=lambda d, b, c, r, py, px: (px * 3 + py * 5 + c * 13 + r * 7 + b * 17).astype(np.float64),
+    )
+    cube = cube.with_df(cube.df.where(~((F.col("col") == 1) & (F.col("row") == 1))))
+
+    def fn(win):
+        res = np.full_like(win, np.nan)
+        res[0, o:, o:] = win[0, :-o, :-o]
+        res[1, :-o, :-o] = win[1, o:, o:]
+        return res
+
+    out = apply_neighborhood(cube, fn, overlap=o)
+
+    def mosaic(c):
+        full = np.full((2, 24, 24), np.nan)
+        for r in c.df.collect():
+            full[:, r.row * 8:(r.row + 1) * 8, r.col * 8:(r.col + 1) * 8] = \
+                decode_tile_float(list(r.bands), c.meta.cell_type, (8, 8))
+        return full
+
+    src = mosaic(cube)
+    exp = np.full_like(src, np.nan)
+    exp[0, o:, o:] = src[0, :-o, :-o]
+    exp[1, :-o, :-o] = src[1, o:, o:]
+    exp[:, 8:16, 8:16] = np.nan  # no output tile for the dropped key
+    assert (1, 1) not in {(r.col, r.row) for r in out.df.select("col", "row").collect()}
+    np.testing.assert_array_equal(mosaic(out), exp)
+
+
 def test_zoom_out_block_means(spark):
     cube = constant_cube(spark, LAYOUT, band_values=[40], cell_type="uint8ud255")
     up = zoom_out(cube)
