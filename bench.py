@@ -8,16 +8,19 @@ Headline (BASELINE.md): spatial-join + tiling throughput (docs/sec) over the
 interleaved-document table, and zonal-stats (aggregate_spatial) wall-time on
 the datacube assembled from its media spans.
 
-``python bench.py --scaling`` additionally runs the identical job at two
-parallelism levels (local[8] vs local[32]) and writes BENCH/BASELINE.md with
-throughput at both + scaling efficiency (the sandbox proxy for N vs 4N
-executors per BASELINE.json north_rule).
+``python bench.py --scaling`` additionally runs the identical job at three
+parallelism levels and rewrites the scaling section of BENCH/BASELINE.md
+(everything before its first ``## `` heading) with throughput at each level
++ scaling efficiency (the sandbox proxy for N vs 4N executors per
+BASELINE.json north_rule); the sections after it are kept.
 """
 
 from __future__ import annotations
 
+import io
 import json
 import os
+import re
 import sys
 import time
 
@@ -183,6 +186,21 @@ def _bench_subprocess(cpus: int, n_docs: int) -> dict[str, float]:
     raise RuntimeError(f"bench subprocess failed: {out.stderr[-2000:]}")
 
 
+def write_scaling_section(path: str, text: str) -> None:
+    """Write ``text`` as the scaling section of ``path``: it replaces
+    everything before the first ``## `` heading; that heading and the
+    sections after it (A/B results, round notes) are kept."""
+    kept = ""
+    if os.path.exists(path):
+        with open(path) as f:
+            old = f.read()
+        m = re.search(r"^## ", old, re.M)
+        kept = old[m.start():] if m else ""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    with open(path, "w") as f:
+        f.write(text.rstrip("\n") + "\n\n" + kept if kept else text)
+
+
 def main() -> None:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     import duckdb
@@ -225,8 +243,7 @@ def main() -> None:
 
         eff_main = eff(lo, hi)
         eff_sat = eff(hi, xhi)
-        os.makedirs("BENCH", exist_ok=True)
-        with open("BENCH/BASELINE.md", "w") as f:
+        with io.StringIO() as f:
             f.write(
                 "# BENCH — multi-parallelism scaling evidence\n\n"
                 f"Input: interleaved table, {n_docs} docs "
@@ -264,6 +281,7 @@ def main() -> None:
             )
             for cpus in levels:
                 f.write(f"- local[{cpus}]: {json.dumps(results[cpus]['all_trials'])}\n")
+            write_scaling_section("BENCH/BASELINE.md", f.getvalue())
         print(json.dumps({
             "scaling_efficiency": round(eff_main, 3),
             "saturation_efficiency": round(eff_sat, 3),

@@ -1,6 +1,5 @@
 from .grid import Extent, LayoutDefinition, GlobalGrid, WORLD_EXTENT
 from .celltype import CellType, cell_type_union
-from .tiles import Tile, encode_tile, decode_tile
 
 __all__ = [
     "Extent",
@@ -9,7 +8,4 @@ __all__ = [
     "WORLD_EXTENT",
     "CellType",
     "cell_type_union",
-    "Tile",
-    "encode_tile",
-    "decode_tile",
 ]

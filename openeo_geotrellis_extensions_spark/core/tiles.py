@@ -1,4 +1,4 @@
-"""Tile codec: numpy 2-D band arrays <-> Spark ``binary`` columns.
+"""The tile format and its one codec.
 
 The reference's ``MultibandTile`` becomes a DataFrame column
 ``bands: array<binary>`` where each element is the raw C-order bytes of one
@@ -9,34 +9,36 @@ record in the reference (DatacubeSupport.scala:110-120).
 An all-nodata band is encoded as the EMPTY marker b"" — the analog of
 ``EmptyMultibandTile`` (openeo-geotrellis/.../EmptyMultibandTile.scala), so
 empty tiles cost ~0 bytes in shuffle/storage.
+
+This module is the only place that knows the format. Operators, sources and
+sinks work on float64 ``(n, bands, h, w)`` stacks with nodata as NaN:
+:func:`decode_tiles` turns a batch of band lists into one stack,
+:func:`encode_tiles` turns a stack back into band lists, and
+:func:`tile_chunks` bounds how many rows one decode materializes.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from typing import Iterator
 
 import numpy as np
+import pandas as pd
 
 from .celltype import CellType, parse_cell_type
 
 EMPTY = b""  # zero-storage all-nodata band marker
 
+#: pixel values one decoded chunk may hold (~64 MB per float64 temporary);
+#: an Arrow batch of 4,096 256x256 tiles would otherwise need several GB
+MAX_CHUNK_VALUES = 8_000_000
 
-@dataclass
-class Tile:
-    """Driver/UDF-side convenience wrapper; never crosses into Spark rows."""
 
-    bands: list[np.ndarray]  # each (h, w)
-    cell_type: CellType
-
-    @property
-    def shape(self) -> tuple[int, int]:
-        return self.bands[0].shape
+def _cell_type(cell_type: CellType | str) -> CellType:
+    return parse_cell_type(cell_type) if isinstance(cell_type, str) else cell_type
 
 
 def encode_band(arr: np.ndarray | None, cell_type: CellType | str) -> bytes:
-    if isinstance(cell_type, str):
-        cell_type = parse_cell_type(cell_type)
+    cell_type = _cell_type(cell_type)
     if arr is None:
         return EMPTY
     a = np.ascontiguousarray(arr, dtype=cell_type.dtype)
@@ -48,10 +50,9 @@ def encode_band(arr: np.ndarray | None, cell_type: CellType | str) -> bytes:
 def decode_band(
     buf: bytes | None, cell_type: CellType | str, shape: tuple[int, int]
 ) -> np.ndarray:
-    """Decode one band; EMPTY/None -> materialized all-nodata array."""
-    if isinstance(cell_type, str):
-        cell_type = parse_cell_type(cell_type)
-    if buf is None or len(buf) == 0:
+    """Decode one band in its own dtype; EMPTY/None -> all-nodata array."""
+    cell_type = _cell_type(cell_type)
+    if is_empty_band(buf):
         nd = cell_type.nodata if cell_type.nodata is not None else 0
         return np.full(shape, nd, dtype=cell_type.dtype)
     return np.frombuffer(buf, dtype=cell_type.dtype).reshape(shape)
@@ -61,64 +62,67 @@ def is_empty_band(buf: bytes | None) -> bool:
     return buf is None or len(buf) == 0
 
 
-def encode_tile(bands: list[np.ndarray | None], cell_type: CellType | str) -> list[bytes]:
-    return [encode_band(b, cell_type) for b in bands]
-
-
-def decode_tile(
-    bufs: list[bytes | None], cell_type: CellType | str, shape: tuple[int, int]
-) -> np.ndarray:
-    """Decode a band list into one (nbands, h, w) stack."""
-    return np.stack([decode_band(b, cell_type, shape) for b in bufs])
-
-
-def decode_tiles_batch_float(
+def decode_tiles(
     band_lists, cell_type: CellType | str, shape: tuple[int, int], n_bands: int
 ) -> np.ndarray:
-    """Decode a WHOLE Arrow batch of tile rows in one numpy pass ->
-    (n_rows, n_bands, h, w) float64 with nodata -> NaN. Empty-band markers
-    ('' / None) decode to all-NaN (or 0 for no-nodata cell types).
+    """Decode a batch of band lists -> (n, n_bands, h, w) float64 with nodata
+    as NaN, in one ``b"".join`` + ``frombuffer`` + nodata mask.
 
-    This is the hot-loop replacement for per-row decode_tile_float: one
-    ``b"".join`` + one ``frombuffer`` + one vectorized nodata mask over the
-    entire batch instead of n_rows x n_bands small-array round trips."""
-    if isinstance(cell_type, str):
-        cell_type = parse_cell_type(cell_type)
-    n = len(band_lists)
-    nbytes = shape[0] * shape[1] * cell_type.dtype.itemsize
-    zero = bytes(nbytes)
+    An EMPTY band decodes to NaN (0 for raw cell types); a ``None`` row — a
+    missing tile, e.g. one side of an outer join — decodes to all-NaN for
+    every cell type."""
+    ct = _cell_type(cell_type)
+    zero = bytes(shape[0] * shape[1] * ct.dtype.itemsize)
     flat: list[bytes] = []
     empties: list[tuple[int, int]] = []
+    missing: list[int] = []
     for i, bl in enumerate(band_lists):
+        if bl is None:
+            missing.append(i)
+            flat.extend([zero] * n_bands)
+            continue
         for b in range(n_bands):
-            buf = bl[b] if bl is not None and b < len(bl) else None
+            buf = bl[b] if b < len(bl) else None
             if is_empty_band(buf):
                 empties.append((i, b))
-                flat.append(zero)
-            else:
-                flat.append(buf)
-    arr = np.frombuffer(b"".join(flat), dtype=cell_type.dtype).reshape(
-        n, n_bands, *shape
-    )
-    out = cell_type.to_float_nan(arr)
-    fill = np.nan if cell_type.has_nodata else 0.0
+                buf = zero
+            flat.append(buf)
+    arr = np.frombuffer(b"".join(flat), dtype=ct.dtype)
+    out = ct.to_float_nan(arr.reshape(len(band_lists), n_bands, *shape))
+    fill = np.nan if ct.has_nodata else 0.0
     for i, b in empties:
         out[i, b] = fill
+    out[missing] = np.nan
     return out
+
+
+def as_tile(values, shape: tuple[int, ...]) -> np.ndarray:
+    """``values`` as float64 broadcast to ``shape``: a callback that returns a
+    constant yields a full tile of it."""
+    return np.broadcast_to(np.asarray(values, dtype=np.float64), shape)
+
+
+def encode_tiles(stack, cell_type: CellType | str) -> list[list[bytes]]:
+    """(n, bands, h, w) float64 with NaN nodata (or a sequence of
+    (bands, h, w) arrays) -> one band list per tile; all-nodata bands become
+    EMPTY. Converts band by band: a whole-batch conversion falls out of
+    cache and is slower."""
+    ct = _cell_type(cell_type)
+    return [[encode_band(ct.from_float_nan(band), ct) for band in tile] for tile in stack]
+
+
+def tile_chunks(rows, n_bands: int, shape: tuple[int, int]) -> Iterator:
+    """Slices of ``rows`` (a DataFrame or a list of tile rows) whose decoded
+    stacks hold at most ``MAX_CHUNK_VALUES`` pixel values (at least one row
+    per slice)."""
+    step = max(1, MAX_CHUNK_VALUES // max(1, n_bands * shape[0] * shape[1]))
+    take = rows.iloc if isinstance(rows, pd.DataFrame) else rows
+    for lo in range(0, len(rows), step):
+        yield take[lo : lo + step]
 
 
 def decode_tile_float(
     bufs: list[bytes | None], cell_type: CellType | str, shape: tuple[int, int]
 ) -> np.ndarray:
-    """Decode to float64 with nodata -> NaN — the canonical in-UDF form."""
-    if isinstance(cell_type, str):
-        cell_type = parse_cell_type(cell_type)
-    out = np.empty((len(bufs), *shape), dtype=np.float64)
-    for i, b in enumerate(bufs):
-        if is_empty_band(b):
-            out[i] = np.nan if cell_type.has_nodata else 0
-        else:
-            out[i] = cell_type.to_float_nan(
-                np.frombuffer(b, dtype=cell_type.dtype).reshape(shape)
-            )
-    return out
+    """One tile's band list -> (bands, h, w) float64 with nodata as NaN."""
+    return decode_tiles([bufs], cell_type, shape, len(bufs))[0]

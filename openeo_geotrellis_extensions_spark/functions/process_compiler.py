@@ -11,7 +11,7 @@ inside Arrow pandas UDFs.
 Value model inside a compiled closure:
   - scalars (float/int/bool)
   - numpy arrays, canonical float64 with NaN as nodata (matching the
-    engine-wide tile decode; see core/tiles.decode_tile_float)
+    engine-wide tile decode; see core/tiles.decode_tiles)
   - "array" values: ndarray with the openEO array dimension on AXIS 0
     (a band list or a time stack), so reducers are axis-0 numpy calls.
 

@@ -17,10 +17,9 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import as_tile, decode_tiles, encode_tiles, tile_chunks
 from ..functions.process_compiler import CompiledProcess, compile_process_graph
 from ..sources.datacube import DataCube, cube_schema
 
@@ -57,32 +56,17 @@ def apply_process(cube: DataCube, graph, context: dict | None = None) -> DataCub
     comp, out_ct_name = _compile(graph, cube)
     src_ct = cube.meta.cell_type
     shape = cube.meta.tile_shape
-    out_ct = parse_cell_type(out_ct_name)
-    schema = cube.df.schema
+    n_bands = cube.meta.n_bands
     ctx = context or {}
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_bands = []
-            for bufs in pdf["bands"]:
-                stack = decode_tile_float(list(bufs), src_ct, shape)
-                res = [
-                    encode_band(
-                        out_ct.from_float_nan(
-                            np.asarray(
-                                comp.fn({"x": stack[b], **ctx}), dtype=np.float64
-                            )
-                        ).astype(out_ct.dtype),
-                        out_ct,
-                    )
-                    for b in range(stack.shape[0])
-                ]
-                out_bands.append(res)
-            pdf = pdf.copy()
-            pdf["bands"] = out_bands
-            yield pdf
+        for pdf in (p for batch in it for p in tile_chunks(batch, n_bands, shape)):
+            stack = decode_tiles(pdf["bands"].tolist(), src_ct, shape, n_bands)
+            res = [[as_tile(comp.fn({"x": band, **ctx}), shape) for band in tile]
+                   for tile in stack]
+            yield pdf.assign(bands=encode_tiles(res, out_ct_name))
 
-    return DataCube(cube.df.mapInPandas(run, schema=schema), cube.meta).with_meta(
+    return DataCube(cube.df.mapInPandas(run, schema=cube.df.schema), cube.meta).with_meta(
         cell_type=out_ct_name
     )
 
@@ -93,34 +77,21 @@ def reduce_bands(cube: DataCube, graph, context: dict | None = None) -> DataCube
     comp, out_ct_name = _compile(graph, cube)
     src_ct = cube.meta.cell_type
     shape = cube.meta.tile_shape
-    out_ct = parse_cell_type(out_ct_name)
-    schema = cube.df.schema
+    n_bands = cube.meta.n_bands
     ctx = context or {}
     labels = list(cube.meta.band_names)
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_bands = []
-            for bufs in pdf["bands"]:
-                stack = decode_tile_float(list(bufs), src_ct, shape)
-                res = comp.fn({"data": stack, "array_labels": labels, **ctx})
-                res_list = list(res) if isinstance(res, list) else [res]
-                out_bands.append(
-                    [
-                        encode_band(
-                            out_ct.from_float_nan(
-                                np.asarray(r, dtype=np.float64)
-                            ).astype(out_ct.dtype),
-                            out_ct,
-                        )
-                        for r in res_list
-                    ]
-                )
-            pdf = pdf.copy()
-            pdf["bands"] = out_bands
-            yield pdf
+        for pdf in (p for batch in it for p in tile_chunks(batch, n_bands, shape)):
+            stack = decode_tiles(pdf["bands"].tolist(), src_ct, shape, n_bands)
+            out = []
+            for tile in stack:
+                res = comp.fn({"data": tile, "array_labels": labels, **ctx})
+                out.append([as_tile(r, shape)
+                            for r in (res if isinstance(res, list) else [res])])
+            yield pdf.assign(bands=encode_tiles(out, out_ct_name))
 
-    df = cube.df.mapInPandas(run, schema=schema)
+    df = cube.df.mapInPandas(run, schema=cube.df.schema)
     return DataCube(df, cube.meta).with_meta(
         cell_type=out_ct_name, band_names=("band0",)
     )
@@ -132,39 +103,22 @@ def _group_time_stacks(cube: DataCube, comp: CompiledProcess, out_ct_name: str,
     src_ct = cube.meta.cell_type
     shape = cube.meta.tile_shape
     n_bands = cube.meta.n_bands
-    out_ct = parse_cell_type(out_ct_name)
     ctx = context or {}
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("time")  # sortBy(_._1.instant), OpenEOProcesses.scala:49
         col = int(pdf["col"].iloc[0])
         row = int(pdf["row"].iloc[0])
-        stacks = np.stack(
-            [decode_tile_float(list(b), src_ct, shape) for b in pdf["bands"]]
-        )  # (T, B, h, w)
+        stacks = decode_tiles(pdf["bands"].tolist(), src_ct, shape, n_bands)  # (T, B, h, w)
         labels = [t.isoformat() for t in pdf["time"]]
-        per_band = []
-        for b in range(n_bands):
-            res = comp.fn({"data": stacks[:, b], "array_labels": labels, **ctx})
-            per_band.append(np.asarray(res, dtype=np.float64))
-        if keep_time:
-            rows = []
-            for ti in range(len(pdf)):
-                bands = [
-                    encode_band(
-                        out_ct.from_float_nan(per_band[b][ti]).astype(out_ct.dtype),
-                        out_ct,
-                    )
-                    for b in range(n_bands)
-                ]
-                rows.append((pdf["time"].iloc[ti], col, row, bands))
-            return pd.DataFrame(rows, columns=["time", "col", "row", "bands"])
-        bands = [
-            encode_band(
-                out_ct.from_float_nan(per_band[b]).astype(out_ct.dtype), out_ct
-            )
+        out_shape = stacks.shape[:1] + shape if keep_time else shape
+        per_band = np.stack([
+            as_tile(comp.fn({"data": stacks[:, b], "array_labels": labels, **ctx}), out_shape)
             for b in range(n_bands)
-        ]
+        ], axis=-3)  # (T, B, h, w) or (B, h, w)
+        if keep_time:
+            return pdf[["time", "col", "row"]].assign(bands=encode_tiles(per_band, out_ct_name))
+        bands = encode_tiles(per_band[None], out_ct_name)[0]
         return pd.DataFrame([(col, row, bands)], columns=["col", "row", "bands"])
 
     return run

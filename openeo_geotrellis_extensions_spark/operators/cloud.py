@@ -18,10 +18,9 @@ from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
 from ..core.geom import parse_geometry, rasterize as raster_mask
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import decode_tiles, encode_tiles, tile_chunks
 from ..sources.datacube import DataCube
 from .kernel import apply_kernel
-from .mask import mask as mask_op
 from .zonal import feature_tile_keys
 
 
@@ -42,15 +41,10 @@ def to_scl_dilation_mask(
     out_ct = parse_cell_type("uint8ud255")
 
     def binarize(it):
-        for pdf in it:
-            out = []
-            for bufs in pdf["bands"]:
-                stack = decode_tile_float(list(bufs), src_ct, shape)
-                m = np.isin(stack[0], mask_values).astype(np.float64)
-                out.append([encode_band(out_ct.from_float_nan(m), out_ct)])
-            res = pdf.copy()
-            res["bands"] = out
-            yield res
+        for pdf in (p for batch in it for p in tile_chunks(batch, 1, shape)):
+            stack = decode_tiles(pdf["bands"].tolist(), src_ct, shape, 1)
+            m = np.isin(stack, mask_values).astype(np.float64)
+            yield pdf.assign(bands=encode_tiles(m, out_ct))
 
     bin_cube = DataCube(
         scl_cube.df.mapInPandas(binarize, schema=scl_cube.df.schema),
@@ -63,17 +57,12 @@ def to_scl_dilation_mask(
     conv_ct = conv.meta.cell_type
 
     def threshold(it):
-        for pdf in it:
-            out = []
-            for bufs in pdf["bands"]:
-                stack = decode_tile_float(list(bufs), conv_ct, shape)
-                # box counts of a 0/1 mask are whole numbers; 0.5 (not 0)
-                # rejects the FFT path's ~1e-15 round-off on clear pixels
-                m = (np.nan_to_num(stack[0], nan=0.0) > 0.5).astype(np.float64)
-                out.append([encode_band(out_ct.from_float_nan(m), out_ct)])
-            res = pdf.copy()
-            res["bands"] = out
-            yield res
+        for pdf in (p for batch in it for p in tile_chunks(batch, 1, shape)):
+            stack = decode_tiles(pdf["bands"].tolist(), conv_ct, shape, 1)
+            # box counts of a 0/1 mask are whole numbers; 0.5 (not 0)
+            # rejects the FFT path's ~1e-15 round-off on clear pixels
+            m = (np.nan_to_num(stack, nan=0.0) > 0.5).astype(np.float64)
+            yield pdf.assign(bands=encode_tiles(m, out_ct))
 
     df = conv.df.mapInPandas(threshold, schema=conv.df.schema)
     return DataCube(df, conv.meta).with_meta(cell_type="uint8ud255", band_names=("mask",))
@@ -107,9 +96,7 @@ def chunk_polygon(
         # the xarray chunk contract of runChunkPolygonUserCode
         for (c, r), grp in pdf.groupby(["col", "row"]):
             grp = grp.sort_values("time")
-            stack = np.stack(
-                [decode_tile_float(list(b), ct, shape) for b in grp["bands"]]
-            )  # (T, bands, h, w)
+            stack = decode_tiles(grp["bands"].tolist(), ct, shape, n_bands)  # (T, bands, h, w)
             if mask_outside and not grp["contained"].iloc[0]:
                 xs, ys = layout.pixel_centers_for_key(int(c), int(r))
                 inside = raster_mask(g, xs, ys)
@@ -119,11 +106,7 @@ def chunk_polygon(
                 raise ValueError(
                     f"chunk fn must preserve shape {stack.shape}, got {res.shape}"
                 )
-            for ti, t in enumerate(grp["time"]):
-                bands = [
-                    encode_band(ct.from_float_nan(res[ti, b]), ct)
-                    for b in range(n_bands)
-                ]
+            for t, bands in zip(grp["time"], encode_tiles(res, ct)):
                 rows.append((t, int(c), int(r), bands))
         return pd.DataFrame(rows, columns=["time", "col", "row", "bands"])
 
@@ -134,11 +117,11 @@ def chunk_polygon(
     # merge duplicate keys from overlapping polygons: first non-nodata wins
     def merge_tiles(pdf: pd.DataFrame) -> pd.DataFrame:
         first = pdf.iloc[0]
-        acc = np.full((n_bands, *shape), np.nan)
-        for bufs in pdf["bands"]:
-            stack = decode_tile_float(list(bufs), ct, shape)
+        stacks = decode_tiles(pdf["bands"].tolist(), ct, shape, n_bands)
+        acc = stacks[0]
+        for stack in stacks[1:]:
             acc = np.where(np.isnan(acc), stack, acc)
-        bands = [encode_band(ct.from_float_nan(acc[b]), ct) for b in range(n_bands)]
+        bands = encode_tiles(acc[None], ct)[0]
         return pd.DataFrame(
             [(first["time"], int(first["col"]), int(first["row"]), bands)],
             columns=["time", "col", "row", "bands"],

@@ -47,42 +47,37 @@ def crop(cube: DataCube, bbox: Extent) -> DataCube:
     + per-tile masking of pixels outside the bbox (tile geometry unchanged;
     outside pixels -> nodata)."""
     import numpy as np
-    import pandas as pd
 
-    from ..core.celltype import parse_cell_type
-    from ..core.tiles import decode_tile_float, encode_band
+    from ..core.tiles import decode_tiles, encode_tiles, tile_chunks
 
     pruned = filter_bbox(cube, bbox)
     ld = cube.meta.layout
-    ct = parse_cell_type(cube.meta.cell_type)
+    ct = cube.meta.cell_type
     shape = cube.meta.tile_shape
+    n_bands = cube.meta.n_bands
 
     def crop_tiles(it):
-        for pdf in it:
-            out = []
-            for rec in pdf.itertuples(index=False):
-                te = ld.extent_for_key(int(rec.col), int(rec.row))
+        for pdf in (p for batch in it for p in tile_chunks(batch, n_bands, shape)):
+            # tiles fully inside the bbox pass through untouched
+            out = pdf["bands"].tolist()
+            rows, insides = [], []
+            for i, (c, r) in enumerate(zip(pdf["col"], pdf["row"])):
+                te = ld.extent_for_key(int(c), int(r))
                 if (bbox.xmin <= te.xmin and bbox.xmax >= te.xmax
                         and bbox.ymin <= te.ymin and bbox.ymax >= te.ymax):
-                    out.append(list(rec.bands))  # fully inside: untouched
                     continue
-                xs, ys = ld.pixel_centers_for_key(int(rec.col), int(rec.row))
-                inside = (
+                xs, ys = ld.pixel_centers_for_key(int(c), int(r))
+                rows.append(i)
+                insides.append(
                     (xs[None, :] > bbox.xmin) & (xs[None, :] < bbox.xmax)
                     & (ys[:, None] > bbox.ymin) & (ys[:, None] < bbox.ymax)
                 )
-                stack = decode_tile_float(list(rec.bands), ct, shape)
-                out.append(
-                    [
-                        encode_band(
-                            ct.from_float_nan(np.where(inside, stack[b], np.nan)), ct
-                        )
-                        for b in range(stack.shape[0])
-                    ]
-                )
-            res = pdf.copy()
-            res["bands"] = out
-            yield res
+            stack = decode_tiles([out[i] for i in rows], ct, shape, n_bands)
+            inside = np.array(insides, dtype=bool).reshape(len(rows), 1, *shape)
+            cropped = np.where(inside, stack, np.nan)
+            for i, bands in zip(rows, encode_tiles(cropped, ct)):
+                out[i] = bands
+            yield pdf.assign(bands=out)
 
     return pruned.with_df(pruned.df.mapInPandas(crop_tiles, schema=pruned.df.schema))
 

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import decode_tiles, encode_tiles
 from ..sources.datacube import DataCube
 
 
@@ -100,10 +100,11 @@ def halo_map(
         if not ((pdf["dc"] == 0) & (pdf["dr"] == 0)).any():
             return pd.DataFrame(columns=list(out_schema.fieldNames()))
         win = np.full((n_bands, h + 2 * py, w + 2 * px), np.nan)
-        for rec in pdf.itertuples(index=False):
-            sy, wy = _halo_span(int(rec.dr), h, py)
-            sx, wx = _halo_span(int(rec.dc), w, px)
-            win[:, wy, wx] = decode_tile_float(list(rec.bands), ct, (h, w))[:, sy, sx]
+        tiles = decode_tiles(pdf["bands"].tolist(), ct, (h, w), n_bands)
+        for dr, dc, tile in zip(pdf["dr"], pdf["dc"], tiles):
+            sy, wy = _halo_span(int(dr), h, py)
+            sx, wx = _halo_span(int(dc), w, px)
+            win[:, wy, wx] = tile[:, sy, sx]
         first = pdf.iloc[0]
         row = [first[k] for k in time_keys] + [int(first["col"]), int(first["row"]), fn(win)]
         return pd.DataFrame([row], columns=time_keys + ["col", "row", "bands"])
@@ -121,15 +122,15 @@ def apply_kernel(cube: DataCube, kernel, factor: float = 1.0) -> DataCube:
     )
 
     def convolve(win: np.ndarray) -> list[bytes]:
-        bands = []
+        centers = []
         for plane in win:
             nanmask = np.isnan(plane)
             conv = _convolve2d_same(np.where(nanmask, 0.0, plane), kernel) * factor
             center = conv[py : py + h, px : px + w]
             # center-nodata stays nodata
             center[nanmask[py : py + h, px : px + w]] = np.nan
-            bands.append(encode_band(out_ct.from_float_nan(center), out_ct))
-        return bands
+            centers.append(center)
+        return encode_tiles([centers], out_ct)[0]
 
     df = halo_map(cube, (py, px), convolve)
     return DataCube(df, cube.meta).with_meta(cell_type=out_ct.name)

@@ -20,9 +20,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ..core.celltype import parse_cell_type
 from ..core.geom import parse_geometry, rasterize
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import decode_tiles, encode_tiles, tile_chunks
 from ..sources.datacube import DataCube
 from .zonal import feature_tile_keys
 
@@ -47,7 +46,7 @@ def mask(
     ct = cube.meta.cell_type
     mct = mask_cube.meta.cell_type
     shape = cube.meta.tile_shape
-    out_ct = parse_cell_type(ct)
+    n_bands = cube.meta.n_bands
 
     m = mask_cube.df.select(*keys, F.col("bands").alias("mask_bands"))
     joined = cube.df
@@ -57,13 +56,10 @@ def mask(
         # the reference's "mask absent -> data unchanged" left-join semantics
         # (DatacubeSupport.scala:191-243) still hold after pruning
         def fully_masked(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                rows = []
-                for i, mb in enumerate(pdf["mask_bands"]):
-                    stack = decode_tile_float([mb[0]], mct, shape)
-                    if not (np.nan_to_num(stack[0], nan=1.0) == 0).any():
-                        rows.append(i)
-                yield pdf.iloc[rows][[*keys]]
+            for pdf in (p for batch in it for p in tile_chunks(batch, 1, shape)):
+                m0 = decode_tiles(pdf["mask_bands"].tolist(), mct, shape, 1)
+                dead = ~(np.nan_to_num(m0, nan=1.0) == 0).any(axis=(1, 2, 3))
+                yield pdf[dead][[*keys]]
 
         dead = m.mapInPandas(
             fully_masked, schema=m.select(*keys).schema
@@ -75,27 +71,18 @@ def mask(
 
     def apply_mask(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         repl = np.nan if replacement is None else float(replacement)
-        for pdf in it:
-            out = []
-            for bufs, mb in zip(pdf["bands"], pdf["mask_bands"]):
-                if mb is None:
-                    out.append(list(bufs))
-                    continue
-                mask_arr = decode_tile_float([mb[0]], mct, shape)[0]
-                hide = ~(np.nan_to_num(mask_arr, nan=1.0) == 0)
-                stack = decode_tile_float(list(bufs), ct, shape)
-                out.append(
-                    [
-                        encode_band(
-                            out_ct.from_float_nan(np.where(hide, repl, stack[b])),
-                            out_ct,
-                        )
-                        for b in range(stack.shape[0])
-                    ]
-                )
-            res = pdf.drop(columns=["mask_bands"])
-            res["bands"] = out
-            yield res
+        for pdf in (p for batch in it for p in tile_chunks(batch, n_bands + 1, shape)):
+            # tiles without a mask tile pass through untouched
+            out = pdf["bands"].tolist()
+            rows = [i for i, mb in enumerate(pdf["mask_bands"]) if mb is not None]
+            sub = pdf.iloc[rows]
+            m0 = decode_tiles(sub["mask_bands"].tolist(), mct, shape, 1)
+            hide = ~(np.nan_to_num(m0, nan=1.0) == 0)
+            stack = decode_tiles(sub["bands"].tolist(), ct, shape, n_bands)
+            enc = encode_tiles(np.where(hide, repl, stack), ct)
+            for i, bands in zip(rows, enc):
+                out[i] = bands
+            yield pdf.drop(columns=["mask_bands"]).assign(bands=out)
 
     return cube.with_df(joined.mapInPandas(apply_mask, schema=out_schema))
 
@@ -112,7 +99,7 @@ def mask_polygon(
     layout = cube.meta.layout
     ct = cube.meta.cell_type
     shape = cube.meta.tile_shape
-    out_ct = parse_cell_type(ct)
+    n_bands = cube.meta.n_bands
 
     fkeys = feature_tile_keys(features, layout)
     # union over features per key: contained if any feature contains the tile
@@ -133,12 +120,10 @@ def mask_polygon(
         repl = np.nan if replacement is None else float(replacement)
         geom_cache: dict[int, object] = {}
         mask_cache: dict[tuple, np.ndarray] = {}
-        for pdf in it:
-            out_rows = []
-            out_bands = []
-            for i, (c, r, bufs, contained, fis, feats) in enumerate(
-                zip(pdf["col"], pdf["row"], pdf["bands"], pdf["contained"],
-                    pdf["fis"], pdf["feats"])
+        for pdf in (p for batch in it for p in tile_chunks(batch, n_bands, shape)):
+            hides = []
+            for c, r, contained, fis, feats in zip(
+                pdf["col"], pdf["row"], pdf["contained"], pdf["fis"], pdf["feats"]
             ):
                 c, r = int(c), int(r)
                 mk = (c, r)
@@ -160,20 +145,11 @@ def mask_polygon(
                                 geom_cache[int(fi)] = g
                             inside_mask |= rasterize(g, xs, ys)
                     mask_cache[mk] = inside_mask
-                hide = inside_mask if inside else ~inside_mask
-                stack = decode_tile_float(list(bufs), ct, shape)
-                out_rows.append(i)
-                out_bands.append(
-                    [
-                        encode_band(
-                            out_ct.from_float_nan(np.where(hide, repl, stack[b])),
-                            out_ct,
-                        )
-                        for b in range(stack.shape[0])
-                    ]
-                )
-            res = pdf.iloc[out_rows].drop(columns=["contained", "fis", "feats"])
-            res["bands"] = out_bands
-            yield res
+                hides.append(inside_mask if inside else ~inside_mask)
+            stack = decode_tiles(pdf["bands"].tolist(), ct, shape, n_bands)
+            masked = np.where(np.array(hides)[:, None], repl, stack)
+            yield pdf.drop(columns=["contained", "fis", "feats"]).assign(
+                bands=encode_tiles(masked, ct)
+            )
 
     return cube.with_df(joined.mapInPandas(apply_mask, schema=out_schema))

@@ -19,8 +19,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ..core.celltype import cell_type_union, parse_cell_type
-from ..core.tiles import decode_tile_float, encode_band, is_empty_band
+from ..core.celltype import cell_type_union
+from ..core.tiles import as_tile, decode_tiles, encode_tiles, tile_chunks
 from ..functions.process_compiler import compile_process_graph
 from ..sources.datacube import DataCube
 
@@ -64,28 +64,14 @@ def merge_cubes(a: DataCube, b: DataCube, overlap_resolver: str | dict | None = 
 
         # cell types differ: decode + re-encode to the union type
         def recode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                out = []
-                for bl, br in zip(pdf["bands_l"], pdf["bands_r"]):
-                    bands = []
-                    sl = (
-                        decode_tile_float(list(bl), ct_a, shape)
-                        if bl is not None
-                        else np.full((na, *shape), np.nan)
-                    )
-                    sr = (
-                        decode_tile_float(list(br), ct_b, shape)
-                        if br is not None
-                        else np.full((nb, *shape), np.nan)
-                    )
-                    for arr in list(sl) + list(sr):
-                        bands.append(
-                            encode_band(union_ct.from_float_nan(arr), union_ct)
-                        )
-                    out.append(bands)
-                res = pdf.drop(columns=["bands_l", "bands_r"])
-                res["bands"] = out
-                yield res
+            for pdf in (p for batch in it for p in tile_chunks(batch, na + nb, shape)):
+                stack = np.concatenate([
+                    decode_tiles(pdf["bands_l"].tolist(), ct_a, shape, na),
+                    decode_tiles(pdf["bands_r"].tolist(), ct_b, shape, nb),
+                ], axis=1)
+                yield pdf.drop(columns=["bands_l", "bands_r"]).assign(
+                    bands=encode_tiles(stack, union_ct)
+                )
 
         out_schema = a.df.schema
         df = joined.mapInPandas(recode, schema=out_schema)
@@ -121,32 +107,19 @@ def merge_cubes(a: DataCube, b: DataCube, overlap_resolver: str | dict | None = 
     comp = compile_process_graph(graph, union_ct.base)
 
     def resolve(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for bl, br in zip(pdf["bands_l"], pdf["bands_r"]):
+        for pdf in (p for batch in it for p in tile_chunks(batch, 2 * na, shape)):
+            sl = decode_tiles(pdf["bands_l"].tolist(), ct_a, shape, na)
+            sr = decode_tiles(pdf["bands_r"].tolist(), ct_b, shape, nb)
+            # a tile present on one side only keeps that side's values
+            for i, (bl, br) in enumerate(zip(pdf["bands_l"], pdf["bands_r"])):
                 if bl is None:
-                    sl = None
-                else:
-                    sl = decode_tile_float(list(bl), ct_a, shape)
-                if br is None:
-                    sr = None
-                else:
-                    sr = decode_tile_float(list(br), ct_b, shape)
-                bands = []
-                for i in range(na):
-                    if sl is None:
-                        v = sr[i]
-                    elif sr is None:
-                        v = sl[i]
-                    else:
-                        v = np.asarray(
-                            comp.fn({"x": sl[i], "y": sr[i]}), dtype=np.float64
-                        )
-                    bands.append(encode_band(union_ct.from_float_nan(v), union_ct))
-                out.append(bands)
-            res = pdf.drop(columns=["bands_l", "bands_r"])
-            res["bands"] = out
-            yield res
+                    sl[i] = sr[i]
+                elif br is not None:
+                    sl[i] = [as_tile(comp.fn({"x": x, "y": y}), shape)
+                             for x, y in zip(sl[i], sr[i])]
+            yield pdf.drop(columns=["bands_l", "bands_r"]).assign(
+                bands=encode_tiles(sl, union_ct)
+            )
 
     df = joined.mapInPandas(resolve, schema=a.df.schema)
     return DataCube(df, a.meta).with_meta(cell_type=out_ct_name)

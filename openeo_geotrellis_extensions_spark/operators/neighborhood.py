@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
 from ..core.grid import LayoutDefinition
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import as_tile, decode_tiles, encode_tiles
 from ..functions.process_compiler import compile_process_graph
 from ..sources.datacube import CubeMeta, DataCube
 from .kernel import halo_map
@@ -54,8 +54,7 @@ def apply_neighborhood(
 
         def user_fn(padded):
             return np.stack(
-                [np.asarray(comp.fn({"x": padded[b], **ctx}), dtype=np.float64)
-                 for b in range(padded.shape[0])]
+                [as_tile(comp.fn({"x": plane, **ctx}), plane.shape) for plane in padded]
             )
 
     def apply_window(win: np.ndarray) -> list[bytes]:
@@ -63,7 +62,7 @@ def apply_neighborhood(
         if res.shape != win.shape:
             raise ValueError(f"neighborhood fn changed shape {win.shape} -> {res.shape}")
         core = res[:, overlap : overlap + h, overlap : overlap + w]
-        return [encode_band(out_ct.from_float_nan(band), out_ct) for band in core]
+        return encode_tiles([core], out_ct)[0]
 
     df = halo_map(cube, (overlap, overlap), apply_window)
     return DataCube(df, cube.meta).with_meta(cell_type=out_ct.name)
@@ -82,7 +81,6 @@ def zoom_out(cube: DataCube) -> DataCube:
     h, w = cube.meta.tile_shape
     ct = cube.meta.cell_type
     n_bands = cube.meta.n_bands
-    out_ct = parse_cell_type(ct)
     temporal = cube.meta.temporal
     keys = (["time"] if temporal else []) + ["col", "row"]
 
@@ -93,8 +91,8 @@ def zoom_out(cube: DataCube) -> DataCube:
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
         first = pdf.iloc[0]
         full = np.full((n_bands, 2 * h, 2 * w), np.nan)
-        for rec in pdf.itertuples(index=False):
-            sub = decode_tile_float(list(rec.bands), ct, (h, w))
+        subs = decode_tiles(pdf["bands"].tolist(), ct, (h, w), n_bands)
+        for rec, sub in zip(pdf.itertuples(index=False), subs):
             ro = (int(rec.row) % 2) * h
             co = (int(rec.col) % 2) * w
             full[:, ro : ro + h, co : co + w] = sub
@@ -106,9 +104,7 @@ def zoom_out(cube: DataCube) -> DataCube:
                 full.reshape(n_bands, h, 2, w, 2).transpose(0, 1, 3, 2, 4).reshape(n_bands, h, w, 4),
                 axis=3,
             )
-        bands = [
-            encode_band(out_ct.from_float_nan(down[b]), out_ct) for b in range(n_bands)
-        ]
+        bands = encode_tiles(down[None], ct)[0]
         row = ([first["time"]] if temporal else []) + [int(first["pc"]), int(first["pr"]), bands]
         cols = (["time"] if temporal else []) + ["col", "row", "bands"]
         return pd.DataFrame([row], columns=cols)

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from ..core.celltype import parse_cell_type
 from ..core.geom import parse_geometry, rasterize as raster_mask
 from ..core.grid import LayoutDefinition
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import decode_tiles, encode_tiles, tile_chunks
 from ..sources.datacube import CubeMeta, DataCube
 from .zonal import feature_tile_keys
 
@@ -59,7 +59,7 @@ def rasterize_features(
                 m = raster_mask(g, xs, ys)
             out[m] = float(getattr(rec, vcol))
         return pd.DataFrame(
-            [(c, r, [encode_band(ct.from_float_nan(out), ct)])],
+            [(c, r, encode_tiles([[out]], ct)[0])],
             columns=["col", "row", "bands"],
         )
 
@@ -107,11 +107,11 @@ def vectorize(cube: DataCube, band: int = 0) -> DataFrame:
     out_schema = ("time timestamp, " if temporal else "") + "value double, geojson string"
 
     def polys(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
+        for pdf in (p for batch in it for p in tile_chunks(batch, band + 1, shape)):
             rows = []
-            for rec in pdf.itertuples(index=False):
+            arrs = decode_tiles(pdf["bands"].tolist(), ct, shape, band + 1)[:, band]
+            for rec, arr in zip(pdf.itertuples(index=False), arrs):
                 c, r = int(rec.col), int(rec.row)
-                arr = decode_tile_float(list(rec.bands), ct, shape)[band]
                 te = layout.extent_for_key(c, r)
                 vals = np.unique(arr[~np.isnan(arr)])
                 for v in vals:

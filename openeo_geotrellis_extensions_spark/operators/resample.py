@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
 from ..core.grid import LayoutDefinition
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import decode_tiles, encode_tiles, tile_chunks
 from ..sources.datacube import CubeMeta, DataCube, cube_schema
 from .kernel import halo_map
 
@@ -81,21 +81,19 @@ def resample_spatial(
 
     def fragments(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         th, tw = target.tile_rows, target.tile_cols
-        for pdf in it:
-            rows = []
-            for rec in pdf.itertuples(index=False):
+        pad_shape = (shape[0] + 2, shape[1] + 2)
+        for pdf in (p for batch in it for p in tile_chunks(batch, n_bands, pad_shape)):
+            if bilinear:  # padded (h+2, w+2) float64 planes from halo_map
+                stacks = [
+                    np.stack([np.frombuffer(buf, dtype=np.float64).reshape(pad_shape)
+                              for buf in bands])
+                    for bands in pdf["bands"]
+                ]
+            else:
+                stacks = decode_tiles(pdf["bands"].tolist(), ct, shape, n_bands)
+            keys, frags = [], []
+            for rec, stack in zip(pdf.itertuples(index=False), stacks):
                 c, r = int(rec.col), int(rec.row)
-                if bilinear:
-                    # padded (h+2, w+2) float64 planes from halo_map
-                    pad_shape = (shape[0] + 2, shape[1] + 2)
-                    stack = np.stack(
-                        [
-                            np.frombuffer(buf, dtype=np.float64).reshape(pad_shape)
-                            for buf in rec.bands
-                        ]
-                    )
-                else:
-                    stack = decode_tile_float(list(rec.bands), ct, shape)
                 se = src.extent_for_key(c, r)
                 # target keys overlapped by this source tile (footprint
                 # forward-projected into the target CRS)
@@ -146,30 +144,25 @@ def resample_spatial(
                     else:
                         for b in range(n_bands):
                             frag[b][ok] = stack[b][py[ok], px[ok]]
-                    bands = [
-                        encode_band(out_ct.from_float_nan(frag[b]), out_ct)
-                        for b in range(n_bands)
-                    ]
-                    if temporal:
-                        rows.append((rec.time, tc, tr, bands))
-                    else:
-                        rows.append((tc, tr, bands))
-            cols = (["time"] if temporal else []) + ["col", "row", "bands"]
-            yield pd.DataFrame(rows, columns=cols)
+                    keys.append(([rec.time] if temporal else []) + [tc, tr])
+                    frags.append(frag)
+            cols = (["time"] if temporal else []) + ["col", "row"]
+            yield pd.DataFrame(keys, columns=cols).assign(
+                bands=encode_tiles(frags, out_ct)
+            )
 
     frags = src_df.mapInPandas(fragments, schema=frag_schema)
 
     keys = (["time"] if temporal else []) + ["col", "row"]
 
     def merge_frags(pdf: pd.DataFrame) -> pd.DataFrame:
-        th, tw = target.tile_rows, target.tile_cols
-        acc = np.full((n_bands, th, tw), np.nan)
-        for bufs in pdf["bands"]:
-            frag = decode_tile_float(list(bufs), out_ct.name, (th, tw))
+        frags = decode_tiles(
+            pdf["bands"].tolist(), out_ct, (target.tile_rows, target.tile_cols), n_bands
+        )
+        acc = frags[0]
+        for frag in frags[1:]:
             acc = np.where(np.isnan(acc), frag, acc)
-        bands = [
-            encode_band(out_ct.from_float_nan(acc[b]), out_ct) for b in range(n_bands)
-        ]
+        bands = encode_tiles(acc[None], out_ct)[0]
         first = pdf.iloc[0]
         row = ([first["time"]] if temporal else []) + [int(first["col"]), int(first["row"]), bands]
         return pd.DataFrame([row], columns=(["time"] if temporal else []) + ["col", "row", "bands"])
@@ -238,11 +231,11 @@ def _resample_aggregate(
 
     def partials(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         th, tw = target.tile_rows, target.tile_cols
-        for pdf in it:
+        for pdf in (p for batch in it for p in tile_chunks(batch, n_bands, shape)):
             rows = []
-            for rec in pdf.itertuples(index=False):
+            stacks = decode_tiles(pdf["bands"].tolist(), ct, shape, n_bands)
+            for rec, stack in zip(pdf.itertuples(index=False), stacks):
                 c, r = int(rec.col), int(rec.row)
-                stack = decode_tile_float(list(rec.bands), ct, shape)
                 se = src.extent_for_key(c, r)
                 # source pixel centers -> global target pixel indices
                 xs = se.xmin + (np.arange(shape[1]) + 0.5) * src.cell_width
@@ -324,10 +317,7 @@ def _resample_aggregate(
                 out = np.where(cnt > 0, acc, np.nan)
             else:
                 out = acc
-        bands = [
-            encode_band(out_ct.from_float_nan(out[b]), out_ct)
-            for b in range(n_bands)
-        ]
+        bands = encode_tiles(out[None], out_ct)[0]
         first = pdf.iloc[0]
         row = ([first["time"]] if temporal else []) + [
             int(first["col"]),

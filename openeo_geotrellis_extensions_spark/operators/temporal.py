@@ -15,12 +15,10 @@ dense right join against distinct-keys x labels producing EMPTY bands.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ..core.celltype import parse_cell_type
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import as_tile, decode_tiles, encode_tiles
 from ..sources.datacube import DataCube, cube_schema
 from .apply_process import _compile
 
@@ -40,7 +38,6 @@ def aggregate_temporal(
     src_ct = cube.meta.cell_type
     shape = cube.meta.tile_shape
     n_bands = cube.meta.n_bands
-    out_ct = parse_cell_type(out_ct_name)
     ctx = context or {}
 
     ivals = spark.createDataFrame(
@@ -63,19 +60,12 @@ def aggregate_temporal(
         col = int(pdf["col"].iloc[0])
         row = int(pdf["row"].iloc[0])
         label = pdf["label"].iloc[0]
-        stacks = np.stack(
-            [decode_tile_float(list(b), src_ct, shape) for b in pdf["bands"]]
-        )
+        stacks = decode_tiles(pdf["bands"].tolist(), src_ct, shape, n_bands)
         tls = [t.isoformat() for t in pdf["time"]]
-        bands = []
-        for b in range(n_bands):
-            res = comp.fn({"data": stacks[:, b], "array_labels": tls, **ctx})
-            bands.append(
-                encode_band(
-                    out_ct.from_float_nan(np.asarray(res, dtype=np.float64)),
-                    out_ct,
-                )
-            )
+        bands = encode_tiles([[
+            as_tile(comp.fn({"data": stacks[:, b], "array_labels": tls, **ctx}), shape)
+            for b in range(n_bands)
+        ]], out_ct_name)[0]
         return pd.DataFrame(
             [(label, col, row, bands)], columns=["label", "col", "row", "bands"]
         )
@@ -121,26 +111,18 @@ def aggregate_temporal_period(
     src_ct = cube.meta.cell_type
     shape = cube.meta.tile_shape
     n_bands = cube.meta.n_bands
-    out_ct = parse_cell_type(out_ct_name)
     ctx = context or {}
 
     tagged = cube.df.withColumn("label", F.date_trunc(trunc, "time"))
 
     def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("time")
-        stacks = np.stack(
-            [decode_tile_float(list(b), src_ct, shape) for b in pdf["bands"]]
-        )
+        stacks = decode_tiles(pdf["bands"].tolist(), src_ct, shape, n_bands)
         tls = [t.isoformat() for t in pdf["time"]]
-        bands = []
-        for b in range(n_bands):
-            res = comp.fn({"data": stacks[:, b], "array_labels": tls, **ctx})
-            bands.append(
-                encode_band(
-                    out_ct.from_float_nan(np.asarray(res, dtype=np.float64)),
-                    out_ct,
-                )
-            )
+        bands = encode_tiles([[
+            as_tile(comp.fn({"data": stacks[:, b], "array_labels": tls, **ctx}), shape)
+            for b in range(n_bands)
+        ]], out_ct_name)[0]
         return pd.DataFrame(
             [(pdf["label"].iloc[0], int(pdf["col"].iloc[0]), int(pdf["row"].iloc[0]), bands)],
             columns=["time", "col", "row", "bands"],

@@ -36,6 +36,7 @@ from pyspark.sql.types import (
 
 from ..core.geom import classify_rect, parse_geometry, points_in_geometry
 from ..core.grid import LayoutDefinition
+from ..core.tiles import decode_tiles, tile_chunks
 from ..sources.datacube import DataCube
 
 _KEYS_SCHEMA = StructType(
@@ -207,27 +208,17 @@ def aggregate_spatial(
     }
     joined = cube.df.join(fkeys, ["col", "row"], "inner")
 
-    from ..core.tiles import decode_tiles_batch_float
-
     def partials(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         geom_cache: dict[int, object] = {}
         mask_cache: dict[tuple, np.ndarray] = {}
         px_area = shape[0] * shape[1]
-        # bound peak memory: the vectorized reduce materializes a few
-        # (rows, nb, h, w) float64 temporaries, so cap rows per chunk at
-        # ~8M elements (~64 MB per temporary) — a 10k-row Arrow batch of
-        # 256x256 production tiles would otherwise peak at several GB
-        chunk_rows = max(1, 8_000_000 // max(1, n_bands * px_area))
         for full_pdf in it:
-            for lo in range(0, len(full_pdf), chunk_rows):
-                pdf = full_pdf.iloc[lo:lo + chunk_rows]
+            # bounded chunks: the vectorized reduce materializes a few
+            # (rows, nb, h, w) float64 temporaries
+            for pdf in tile_chunks(full_pdf, n_bands, shape):
                 nrow = len(pdf)
-                if nrow == 0:
-                    continue
                 # one decode pass for the chunk: (n, nb, h, w) with NaN
-                cube_vals = decode_tiles_batch_float(
-                    pdf["bands"].tolist(), ct_name, shape, n_bands
-                )
+                cube_vals = decode_tiles(pdf["bands"].tolist(), ct_name, shape, n_bands)
                 contained = pdf["contained"].to_numpy(dtype=bool)
                 cols_a = pdf["col"].to_numpy()
                 rows_a = pdf["row"].to_numpy()
@@ -464,7 +455,6 @@ def aggregate_spatial_weighted(
 
     from ..core.geom import clipped_area
     from ..core.grid import Extent as _Extent
-    from ..core.tiles import decode_tiles_batch_float
 
     def partials(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         geom_cache: dict[int, object] = {}
@@ -504,13 +494,9 @@ def aggregate_spatial_weighted(
             wq_cache[key] = wq
             return wq
 
-        for pdf in it:
+        for pdf in (p for batch in it for p in tile_chunks(batch, n_bands, shape)):
             nrow = len(pdf)
-            if nrow == 0:
-                continue
-            cube_vals = decode_tiles_batch_float(
-                pdf["bands"].tolist(), ct_name, shape, n_bands
-            )
+            cube_vals = decode_tiles(pdf["bands"].tolist(), ct_name, shape, n_bands)
             contained = pdf["contained"].to_numpy(dtype=bool)
             cols_a = pdf["col"].to_numpy()
             rows_a = pdf["row"].to_numpy()

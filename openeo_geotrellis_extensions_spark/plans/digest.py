@@ -11,9 +11,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..core.tiles import decode_tile_float
+from ..core.tiles import decode_tiles, tile_chunks
 from ..sources.datacube import DataCube
 
 
@@ -29,6 +28,7 @@ def cube_digest(cube: DataCube, round_to: int = 4) -> DataFrame:
     'yyyy-MM-dd' string when the cube is temporal."""
     ct = cube.meta.cell_type
     shape = cube.meta.tile_shape
+    n_bands = cube.meta.n_bands
     temporal = cube.meta.temporal
     cols = (["date"] if temporal else []) + ["col", "row", "band", "cnt", "sm", "mn", "mx"]
     fields = ("date string, " if temporal else "") + (
@@ -36,11 +36,11 @@ def cube_digest(cube: DataCube, round_to: int = 4) -> DataFrame:
     )
 
     def digest(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
+        for pdf in (p for batch in it for p in tile_chunks(batch, n_bands, shape)):
             rows = []
-            for rec in pdf.itertuples(index=False):
-                stack = decode_tile_float(list(rec.bands), ct, shape)
-                for b in range(stack.shape[0]):
+            stacks = decode_tiles(pdf["bands"].tolist(), ct, shape, n_bands)
+            for rec, stack in zip(pdf.itertuples(index=False), stacks):
+                for b in range(n_bands):
                     v = stack[b][~np.isnan(stack[b])]
                     base = ([rec.time.strftime("%Y-%m-%d")] if temporal else []) + [
                         int(rec.col), int(rec.row), b

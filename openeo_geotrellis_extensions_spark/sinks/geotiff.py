@@ -30,7 +30,7 @@ import pandas as pd
 
 from ..core.celltype import parse_cell_type
 from ..core.grid import Extent
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import decode_tiles, encode_tiles, tile_chunks
 from ..sources.datacube import DataCube
 
 _SAMPLE_FORMAT = {"u": 1, "i": 2, "f": 3}
@@ -367,13 +367,14 @@ def save_stitched_geotiff(
     W = ld.layout_cols * ld.tile_cols
     nb = cube.meta.n_bands
     full = np.full((nb, H, W), np.nan)
-    for r in df.collect():
-        stack = decode_tile_float(list(r.bands), ct, cube.meta.tile_shape)
-        full[
-            :,
-            r.row * ld.tile_rows : (r.row + 1) * ld.tile_rows,
-            r.col * ld.tile_cols : (r.col + 1) * ld.tile_cols,
-        ] = stack
+    for rows in tile_chunks(df.collect(), nb, cube.meta.tile_shape):
+        stacks = decode_tiles([r.bands for r in rows], ct, cube.meta.tile_shape, nb)
+        for r, stack in zip(rows, stacks):
+            full[
+                :,
+                r.row * ld.tile_rows : (r.row + 1) * ld.tile_rows,
+                r.col * ld.tile_cols : (r.col + 1) * ld.tile_cols,
+            ] = stack
     out = np.stack([ct.from_float_nan(full[b]) for b in range(nb)])
     write_geotiff(path, out, ld.extent, nodata=ct.nodata,
                   rows_per_strip=rows_per_strip)
@@ -405,8 +406,8 @@ def save_geotiff_tiles(
         gc, gr = int(pdf["gcol"].iloc[0]), int(pdf["grow"].iloc[0])
         date = pdf["time"].iloc[0].strftime("%Y-%m-%d") if temporal else "static"
         full = np.full((nb, grid * th, grid * tw), np.nan)
-        for rec in pdf.itertuples(index=False):
-            stack = decode_tile_float(list(rec.bands), ct, (th, tw))
+        stacks = decode_tiles(pdf["bands"].tolist(), ct, (th, tw), nb)
+        for rec, stack in zip(pdf.itertuples(index=False), stacks):
             ro = (int(rec.row) - gr * grid) * th
             co = (int(rec.col) - gc * grid) * tw
             full[:, ro : ro + th, co : co + tw] = stack
@@ -463,8 +464,8 @@ def save_sample_geotiffs(cube: DataCube, features, out_dir: str) -> pd.DataFrame
         nc = int(pdf["_fc1"].iloc[0]) - c0 + 1
         nr = int(pdf["_fr1"].iloc[0]) - r0 + 1
         full = np.full((nb, nr * th, nc * tw), np.nan)
-        for rec in pdf.itertuples(index=False):
-            stack = decode_tile_float(list(rec.bands), ct, (th, tw))
+        stacks = decode_tiles(pdf["bands"].tolist(), ct, (th, tw), nb)
+        for rec, stack in zip(pdf.itertuples(index=False), stacks):
             ro = (int(rec.row) - r0) * th
             co = (int(rec.col) - c0) * tw
             full[:, ro : ro + th, co : co + tw] = stack
@@ -510,11 +511,9 @@ def load_geotiff(spark, path: str, layout) -> DataCube:
     rps = meta["rows_per_strip"]
     nodata = meta["nodata"]
     layout_cols = ld.layout_cols
-    out_ct = parse_cell_type("float64")
-
     def read_rows(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows = []
+            keys, tiles = [], []
             for task in pdf.itertuples(index=False):
                 r = int(task.r)
                 y0, y1 = r * th, (r + 1) * th
@@ -527,14 +526,13 @@ def load_geotiff(spark, path: str, layout) -> DataCube:
                 if nodata is not None and not np.isnan(nodata):
                     band_rows = np.where(band_rows == nodata, np.nan, band_rows)
                 for c in range(layout_cols):
-                    tiles = [
-                        band_rows[:, c * tw : (c + 1) * tw, b] for b in range(nb)
-                    ]
-                    if all(np.isnan(t).all() for t in tiles):
-                        continue
-                    bands = [encode_band(out_ct.from_float_nan(t), out_ct) for t in tiles]
-                    rows.append((c, r, bands))
-            yield pd.DataFrame(rows, columns=["col", "row", "bands"])
+                    tile = band_rows[:, c * tw : (c + 1) * tw].transpose(2, 0, 1)
+                    if not np.isnan(tile).all():
+                        keys.append((c, r))
+                        tiles.append(tile)
+            yield pd.DataFrame(keys, columns=["col", "row"]).assign(
+                bands=encode_tiles(tiles, "float64")
+            )
 
     tasks = spark.range(ld.layout_rows).select(
         F.col("id").cast("int").alias("r")

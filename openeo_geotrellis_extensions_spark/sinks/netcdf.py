@@ -22,7 +22,7 @@ import numpy as np
 import pandas as pd
 
 from ..core.celltype import parse_cell_type
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import decode_tiles, encode_tiles, tile_chunks
 from ..operators.zonal import feature_tile_keys
 from ..sources.datacube import DataCube
 from .netcdf_format import (
@@ -132,11 +132,12 @@ def save_netcdf(cube: DataCube, path: str) -> str:
         )
     tpos = {t: i for i, t in enumerate(times)}
     data = np.full((len(times), nb, ny, nx), np.nan)
-    for rec in rows:
-        stack = decode_tile_float(list(rec.bands), ct, (th, tw))
-        ti = tpos[rec.time] if temporal else 0
-        ro, co = (rec.row - r0) * th, (rec.col - c0) * tw
-        data[ti, :, ro : ro + th, co : co + tw] = stack
+    for chunk in tile_chunks(rows, nb, (th, tw)):
+        stacks = decode_tiles([rec.bands for rec in chunk], ct, (th, tw), nb)
+        for rec, stack in zip(chunk, stacks):
+            ti = tpos[rec.time] if temporal else 0
+            ro, co = (rec.row - r0) * th, (rec.col - c0) * tw
+            data[ti, :, ro : ro + th, co : co + tw] = stack
     x0 = ld.extent.xmin + c0 * ld.tile_width
     y1 = ld.extent.ymax - r0 * ld.tile_height
     coords = {
@@ -184,8 +185,8 @@ def save_samples(cube: DataCube, features, out_dir: str) -> pd.DataFrame:
         nr = int(pdf["_fr1"].iloc[0]) - r0 + 1
         ny, nx = nr * th, nc * tw
         data = np.full((len(times), nb, ny, nx), np.nan)
-        for rec in pdf.itertuples(index=False):
-            stack = decode_tile_float(list(rec.bands), ct, (th, tw))
+        stacks = decode_tiles(pdf["bands"].tolist(), ct, (th, tw), nb)
+        for rec, stack in zip(pdf.itertuples(index=False), stacks):
             ti = tpos[rec.time]
             ro = (int(rec.row) - r0) * th
             co = (int(rec.col) - c0) * tw
@@ -258,7 +259,7 @@ def load_netcdf(spark, path: str, layout, dates: list | None = None) -> DataCube
 
     def read_strips(it):
         for pdf in it:
-            rows = []
+            keys, tiles = [], []
             for task in pdf.itertuples(index=False):
                 ti, r = int(task.ti), int(task.r)
                 strips = []
@@ -270,14 +271,13 @@ def load_netcdf(spark, path: str, layout, dates: list | None = None) -> DataCube
                         strip = np.where(strip == fill, np.nan, strip)
                     strips.append(strip)
                 for c in range(layout_cols):
-                    tiles = [s[:, c * tw : (c + 1) * tw] for s in strips]
-                    if all(np.isnan(t).all() for t in tiles):
-                        continue
-                    bands = [
-                        encode_band(ct.from_float_nan(t), ct) for t in tiles
-                    ]
-                    rows.append((times[ti], c, r, bands))
-            yield pd.DataFrame(rows, columns=["time", "col", "row", "bands"])
+                    tile = np.stack([s[:, c * tw : (c + 1) * tw] for s in strips])
+                    if not np.isnan(tile).all():
+                        keys.append((times[ti], c, r))
+                        tiles.append(tile)
+            yield pd.DataFrame(keys, columns=["time", "col", "row"]).assign(
+                bands=encode_tiles(tiles, ct)
+            )
 
     tasks = spark.range(nt * ld.layout_rows).select(
         (F.col("id") % nt).cast("int").alias("ti"),

@@ -13,7 +13,7 @@ import zlib
 import numpy as np
 
 from ..core.celltype import parse_cell_type
-from ..core.tiles import decode_tile_float
+from ..core.tiles import decode_tiles, tile_chunks
 from ..sources.datacube import DataCube
 
 
@@ -194,12 +194,13 @@ def save_png(cube: DataCube, path: str, date: str | None = None,
     H = ld.layout_rows * ld.tile_rows
     W = ld.layout_cols * ld.tile_cols
     full = np.full((H, W), np.nan)
-    for r in df.collect():
-        stack = decode_tile_float(list(r.bands), ct, cube.meta.tile_shape)
-        full[
-            r.row * ld.tile_rows : (r.row + 1) * ld.tile_rows,
-            r.col * ld.tile_cols : (r.col + 1) * ld.tile_cols,
-        ] = stack[band]
+    for rows in tile_chunks(df.collect(), band + 1, cube.meta.tile_shape):
+        stacks = decode_tiles([r.bands for r in rows], ct, cube.meta.tile_shape, band + 1)
+        for r, stack in zip(rows, stacks):
+            full[
+                r.row * ld.tile_rows : (r.row + 1) * ld.tile_rows,
+                r.col * ld.tile_cols : (r.col + 1) * ld.tile_cols,
+            ] = stack[band]
     scaled = np.clip((full - vmin) / max(vmax - vmin, 1e-9) * 255, 0, 255)
     scaled = np.nan_to_num(scaled, nan=0.0).astype(np.uint8)
     write_png(path, scaled)

@@ -35,15 +35,13 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..core.celltype import parse_cell_type
 from ..core.grid import LayoutDefinition
-from ..core.tiles import decode_tile_float, encode_band
+from ..core.tiles import as_tile, encode_tiles, tile_chunks
 from .interleaved import (
     DATES,
     MEDIA_CELL_TYPE,
     explode_spans,
     media_layout,
-    media_tile_values,
 )
 
 
@@ -95,14 +93,6 @@ class DataCube:
     def with_meta(self, **kw) -> "DataCube":
         return DataCube(self.df, replace(self.meta, **kw))
 
-    def decode_partition(self, pdf: pd.DataFrame) -> np.ndarray:
-        """(n_rows, n_bands, h, w) float64 NaN-nodata stack for a pandas batch."""
-        ct = self.meta.cell_type
-        shape = self.meta.tile_shape
-        return np.stack(
-            [decode_tile_float(list(b), ct, shape) for b in pdf["bands"]]
-        )
-
 
 def cube_schema(temporal: bool) -> StructType:
     fields = []
@@ -134,12 +124,10 @@ def constant_cube(
     all-nodata band). Built as literal binary columns — one encode on the
     driver, broadcast as constants into every row."""
     dates = DATES if dates is None else dates
-    ct = parse_cell_type(cell_type)
     shape = (layout.tile_rows, layout.tile_cols)
-    bufs = []
-    for v in band_values:
-        arr = None if v is None else np.full(shape, v)
-        bufs.append(encode_band(arr, ct))
+    bufs = encode_tiles(
+        [[np.full(shape, np.nan if v is None else v) for v in band_values]], cell_type
+    )[0]
     keys = spark.range(layout.layout_cols * layout.layout_rows).select(
         (F.col("id") % layout.layout_cols).cast("int").alias("col"),
         (F.col("id") / layout.layout_cols).cast("int").alias("row"),
@@ -182,9 +170,7 @@ def arithmetic_cube(
     ``(px + py + col + row + d) % 13 == 0``. DuckDB can regenerate the exact
     pixels with generate_series, giving raster operators true SQL oracles."""
     dates = DATES if dates is None else dates
-    ct = parse_cell_type(cell_type)
     h, w = layout.tile_rows, layout.tile_cols
-    nd = ct.nodata if ct.nodata is not None else 0
 
     def default_fn(d, b, c, r, py, px):
         v = (px * 3 + py * 5 + c * 13 + r * 7 + d * 11 + b * 17) % 97
@@ -205,16 +191,15 @@ def arithmetic_cube(
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         px = np.arange(w)[None, :]
         py = np.arange(h)[:, None]
-        for pdf in it:
-            out_rows = []
-            for d, c, r in zip(pdf["d"], pdf["col"], pdf["row"]):
-                bands = []
-                for b in range(n_bands):
-                    v = fn(int(d), b, int(c), int(r), py, px)
-                    enc = ct.from_float_nan(np.asarray(v, dtype=np.float64))
-                    bands.append(enc.tobytes())
-                out_rows.append((dates_np[int(d)], int(c), int(r), bands))
-            yield pd.DataFrame(out_rows, columns=["time", "col", "row", "bands"])
+        for pdf in (p for batch in it for p in tile_chunks(batch, n_bands, (h, w))):
+            ds, cs, rs = (pdf[k].to_numpy() for k in ("d", "col", "row"))
+            tiles = [
+                [as_tile(fn(int(d), b, int(c), int(r), py, px), (h, w)) for b in range(n_bands)]
+                for d, c, r in zip(ds, cs, rs)
+            ]
+            yield pd.DataFrame({
+                "time": dates_np[ds], "col": cs, "row": rs, "bands": encode_tiles(tiles, cell_type)
+            })
 
     df = base.mapInPandas(gen, schema=schema)
     names = tuple(f"band{i}" for i in range(n_bands))
@@ -244,11 +229,10 @@ def pattern_cube(
             rng_vals.append(20.0 + 100.0 * rs.random((h, w)))
     from datetime import datetime
 
-    ct = parse_cell_type("float64")
-    rows = [
-        (datetime.fromisoformat(date), i, 0, [encode_band(rng_vals[i], ct)])
-        for i in range(layout.layout_cols)
-    ]
+    tiles = encode_tiles(
+        [[np.full((h, w), np.nan) if v is None else v] for v in rng_vals], "float64"
+    )
+    rows = [(datetime.fromisoformat(date), i, 0, tiles[i]) for i in range(layout.layout_cols)]
     df = spark.createDataFrame(rows, schema=cube_schema(temporal=True))
     return DataCube(df, CubeMeta(layout, "float64", ("band0",), temporal=True))
 

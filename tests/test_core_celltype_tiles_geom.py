@@ -28,9 +28,13 @@ from openeo_geotrellis_extensions_spark.core.geom import (
 from openeo_geotrellis_extensions_spark.core.grid import Extent
 from openeo_geotrellis_extensions_spark.core.tiles import (
     EMPTY,
+    MAX_CHUNK_VALUES,
     decode_band,
     decode_tile_float,
+    decode_tiles,
     encode_band,
+    encode_tiles,
+    tile_chunks,
 )
 
 
@@ -94,6 +98,56 @@ def test_decode_tile_float_nan():
     assert np.isnan(stack[0, 0, 1])
     assert stack[0, 1, 1] == 4
     assert np.isnan(stack[1]).all()
+
+
+CODEC_CTS = ["uint8", "uint8raw", "uint8ud255", "int16", "int32", "float32",
+             "float32raw", "float64"]
+
+
+@pytest.mark.parametrize("name", CODEC_CTS)
+def test_batch_codec_matches_band_codec(name):
+    """encode_tiles == encode_band band by band (EMPTY rule included), and
+    decode_tiles inverts it; EMPTY bands and None rows decode as nodata."""
+    ct = parse_cell_type(name)
+    rng = np.random.default_rng(7)
+    stack = rng.integers(1, 100, size=(4, 3, 5, 6)).astype(np.float64)
+    stack[0, 0, 2, 3] = np.nan  # one nodata pixel
+    stack[1, 2] = np.nan  # one all-nodata band
+    bands = encode_tiles(stack, name)
+    assert bands == [[encode_band(ct.from_float_nan(b), ct) for b in t] for t in stack]
+    assert (bands[1][2] == EMPTY) == ct.has_nodata
+    back = decode_tiles(bands + [None], name, (5, 6), 3)
+    assert back.shape == (5, 3, 5, 6)
+    # raw integer types store NaN as 0; raw float types keep NaN pixels
+    want = np.where(np.isnan(stack), np.nan if ct.has_nodata or ct.is_float else 0.0, stack)
+    fill = np.nan if ct.has_nodata else 0.0  # an EMPTY band
+    np.testing.assert_array_equal(back[:4], want)
+    assert np.isnan(back[4]).all()  # a missing tile is nodata for every type
+    for i in range(4):
+        np.testing.assert_array_equal(decode_tile_float(bands[i], name, (5, 6)), want[i])
+    # short band lists and explicit EMPTY/None bands decode as EMPTY
+    short = decode_tiles([[bands[0][0]], [EMPTY, None, bands[0][2]]], name, (5, 6), 3)
+    np.testing.assert_array_equal(short[0, 0], want[0, 0])
+    assert np.array_equal(short[0, 1:], np.full((2, 5, 6), fill), equal_nan=True)
+    assert np.array_equal(short[1, :2], np.full((2, 5, 6), fill), equal_nan=True)
+
+
+def test_tile_chunks_cap_and_cover():
+    import pandas as pd
+
+    pdf = pd.DataFrame({"i": np.arange(1000)})
+    for n_bands, shape in [(1, (8, 8)), (3, (256, 256)), (2, (2048, 2048))]:
+        chunks = list(tile_chunks(pdf, n_bands, shape))
+        per_row = n_bands * shape[0] * shape[1]
+        assert all(len(c) >= 1 for c in chunks)
+        assert all(len(c) * per_row <= max(MAX_CHUNK_VALUES, per_row) for c in chunks)
+        assert np.concatenate([c["i"].to_numpy() for c in chunks]).tolist() == list(range(1000))
+    assert list(tile_chunks(pdf.iloc[:0], 1, (8, 8))) == []
+    # driver-side sinks chunk a collected list of rows the same way
+    rows = list(range(1000))
+    chunks = list(tile_chunks(rows, 3, (256, 256)))
+    assert max(map(len, chunks)) * 3 * 256 * 256 <= MAX_CHUNK_VALUES
+    assert sum(chunks, []) == rows
 
 
 # -- geometry ---------------------------------------------------------------

@@ -88,7 +88,39 @@ def test_merge_temporal_disjoint_pads_missing(spark):
     assert np.isnan(t[(DATES[2], 0, 0)]).all()
 
 
+def test_merge_recode_missing_side_is_nodata(spark):
+    """Different cell types take the decode + re-encode path: a key present
+    on one side only gets nodata for the other side's bands."""
+    a = constant_cube(spark, LAYOUT, dates=DATES[:2], band_values=[2], cell_type="uint8ud255")
+    b = constant_cube(spark, LAYOUT, dates=DATES[1:3], band_values=[5, 7], cell_type="int16")
+    m = merge_cubes(a, b)
+    assert m.meta.cell_type == "int16" and m.meta.n_bands == 3
+    assert m.df.count() == 3 * 4  # dates 0..2 x 4 keys
+    t = [tiles_of(m, band=i) for i in range(3)]
+    assert (t[0][(DATES[0], 1, 0)] == 2).all()
+    assert np.isnan(t[1][(DATES[0], 1, 0)]).all() and np.isnan(t[2][(DATES[0], 1, 0)]).all()
+    assert np.isnan(t[0][(DATES[2], 1, 0)]).all()
+    assert (t[1][(DATES[2], 1, 0)] == 5).all() and (t[2][(DATES[2], 1, 0)] == 7).all()
+    assert [t[i][(DATES[1], 1, 0)][0, 0] for i in range(3)] == [2, 5, 7]
+
+
 # -- apply / reduce ---------------------------------------------------------
+
+_CONSTANT = {"c": {"process_id": "add", "arguments": {"x": 1, "y": 2}, "result": True}}
+
+
+@pytest.mark.parametrize("op", [apply_process, reduce_bands, reduce_time])
+def test_constant_callback_fills_tile(spark, op):
+    """A callback that ignores its input and returns a constant yields a
+    full tile of that constant (not a one-value band)."""
+    cube = constant_cube(spark, LAYOUT, dates=DATES[:2], band_values=[4, 6], cell_type="float32")
+    out = op(cube, _CONSTANT)
+    rows = out.df.collect()
+    assert rows
+    for r in rows:
+        stack = decode_tile_float(list(r.bands), out.meta.cell_type, SHAPE)
+        assert stack.shape[1:] == SHAPE
+        assert (stack == 3).all()
 
 def test_apply_add_constant(spark):
     cube = constant_cube(spark, LAYOUT, band_values=[10, None])

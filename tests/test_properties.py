@@ -19,7 +19,14 @@ from openeo_geotrellis_extensions_spark.core.grid import (
     GlobalGrid,
     LayoutDefinition,
 )
-from openeo_geotrellis_extensions_spark.core.tiles import decode_band, encode_band
+from openeo_geotrellis_extensions_spark.core.tiles import (
+    MAX_CHUNK_VALUES,
+    decode_band,
+    decode_tiles,
+    encode_band,
+    encode_tiles,
+    tile_chunks,
+)
 
 CT_NAMES = ["uint8", "uint8raw", "uint8ud255", "int8", "uint16", "int16",
             "int32", "float32", "float64"]
@@ -81,6 +88,41 @@ def test_tile_codec_roundtrip(ct_name, fill, h, w):
     arr = np.full((h, w), fill % 120, dtype=ct.dtype)
     back = decode_band(encode_band(arr, ct), ct, (h, w))
     np.testing.assert_array_equal(arr, back)
+
+
+@given(st.sampled_from(CT_NAMES + ["float32raw"]), st.integers(0, 2**32 - 1),
+       st.integers(0, 5), st.integers(1, 3), st.integers(1, 6), st.integers(1, 6))
+@settings(max_examples=100, deadline=None)
+def test_batch_codec_roundtrip(ct_name, seed, n, nb, h, w):
+    """decode_tiles(encode_tiles(x)) == x on representable values, with
+    random nodata pixels, all-nodata bands and missing (None) rows."""
+    ct = parse_cell_type(ct_name)
+    rng = np.random.default_rng(seed)
+    stack = rng.integers(1, 120, size=(n, nb, h, w)).astype(np.float64)
+    stack[rng.random(stack.shape) < 0.2] = np.nan
+    stack[rng.random((n, nb)) < 0.3] = np.nan
+    bands = encode_tiles(stack, ct)
+    assert bands == [[encode_band(ct.from_float_nan(b), ct) for b in t] for t in stack]
+    missing = rng.random(n) < 0.3
+    rows = [None if m else b for m, b in zip(missing, bands)]
+    back = decode_tiles(rows, ct_name, (h, w), nb)
+    want = np.where(np.isnan(stack), np.nan if ct.has_nodata or ct.is_float else 0.0, stack)
+    want[missing] = np.nan
+    np.testing.assert_array_equal(back, want)
+
+
+@given(st.integers(0, 3000), st.integers(1, 4), st.integers(1, 3000), st.integers(1, 3000))
+@settings(max_examples=100, deadline=None)
+def test_tile_chunks_bounded_and_exhaustive(n, nb, h, w):
+    import pandas as pd
+
+    pdf = pd.DataFrame({"i": np.arange(n)})
+    chunks = list(tile_chunks(pdf, nb, (h, w)))
+    per_row = nb * h * w
+    assert all(1 <= len(c) and len(c) * per_row <= max(MAX_CHUNK_VALUES, per_row)
+               for c in chunks)
+    got = np.concatenate([c["i"].to_numpy() for c in chunks]) if chunks else np.array([])
+    assert got.tolist() == list(range(n))
 
 
 @given(
