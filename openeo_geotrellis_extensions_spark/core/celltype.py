@@ -92,9 +92,14 @@ class CellType:
         return out
 
     def from_float_nan(self, arr: np.ndarray) -> np.ndarray:
-        """Encode float64-with-NaN back into this cell type."""
+        """Encode float64-with-NaN back into this cell type: NaN becomes the
+        nodata value (0 for raw integer types; raw and NaN-nodata float
+        types keep NaN)."""
         if self.is_float:
-            return arr.astype(self.dtype)
+            out = arr.astype(self.dtype)
+            if self.nodata is not None and not np.isnan(self.nodata):
+                out[np.isnan(out)] = self.nodata
+            return out
         out = arr.copy()
         nd = self.nodata if self.nodata is not None else 0
         out[np.isnan(out)] = nd

@@ -424,6 +424,15 @@ def clipped_area(geom: Geometry, e: Extent) -> float:
     return max(total, 0.0)
 
 
+def fills_bbox(geom: Geometry) -> bool:
+    """True when the geometry covers its whole bounding box, up to 1e-9 of
+    the box's area: an axis-aligned rectangle (or a zero-area box such as a
+    single point)."""
+    bb = geom.bbox()
+    area = bb.width * bb.height
+    return abs(clipped_area(geom, bb) - area) <= 1e-9 * max(1.0, area)
+
+
 def reproject_geometry(
     geom: Geometry, src_crs: str, dst_crs: str, densify: int = 0
 ) -> Geometry:

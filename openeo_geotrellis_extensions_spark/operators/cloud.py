@@ -17,11 +17,10 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
-from ..core.geom import parse_geometry, rasterize as raster_mask
 from ..core.tiles import decode_tiles, encode_tiles, tile_chunks
 from ..sources.datacube import DataCube
 from .kernel import apply_kernel
-from .zonal import feature_tile_keys
+from .cover import feature_geometries, feature_tile_keys, pixel_masks
 
 
 def to_scl_dilation_mask(
@@ -84,13 +83,11 @@ def chunk_polygon(
     shape = cube.meta.tile_shape
     n_bands = cube.meta.n_bands
     fkeys = F.broadcast(feature_tile_keys(features, layout))
-    joined = cube.df.join(fkeys, ["col", "row"], "inner").join(
-        F.broadcast(features), "feature_index", "inner"
-    )
+    joined = cube.df.join(fkeys, ["col", "row"], "inner")
+    mask_of = pixel_masks(feature_geometries(features), layout)
 
     def per_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
         fi = int(pdf["feature_index"].iloc[0])
-        g = parse_geometry(pdf["geojson"].iloc[0])
         rows = []
         # the callback sees the FULL time stack per tile (t, bands, h, w) —
         # the xarray chunk contract of runChunkPolygonUserCode
@@ -98,8 +95,7 @@ def chunk_polygon(
             grp = grp.sort_values("time")
             stack = decode_tiles(grp["bands"].tolist(), ct, shape, n_bands)  # (T, bands, h, w)
             if mask_outside and not grp["contained"].iloc[0]:
-                xs, ys = layout.pixel_centers_for_key(int(c), int(r))
-                inside = raster_mask(g, xs, ys)
+                inside = mask_of(fi, int(c), int(r), False)
                 stack = np.where(inside[None, None], stack, np.nan)
             res = np.asarray(fn(stack, fi), dtype=np.float64)
             if res.shape != stack.shape:

@@ -20,10 +20,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from ..core.geom import parse_geometry, rasterize
 from ..core.tiles import decode_tiles, encode_tiles, tile_chunks
 from ..sources.datacube import DataCube
-from .zonal import feature_tile_keys
+from .cover import feature_geometries, feature_tile_keys, pixel_masks
 
 
 def mask(
@@ -107,48 +106,23 @@ def mask_polygon(
         F.max("contained").alias("contained"),
         F.collect_set("feature_index").alias("fis"),
     )
-    joined = cube.df.join(F.broadcast(key_info), ["col", "row"], "inner").join(
-        F.broadcast(
-            features.groupBy().agg(
-                F.collect_list(F.struct("feature_index", "geojson")).alias("feats")
-            )
-        ),
-    )
+    joined = cube.df.join(F.broadcast(key_info), ["col", "row"], "inner")
+    mask_of = pixel_masks(feature_geometries(features), layout)
     out_schema = cube.df.schema
 
     def apply_mask(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         repl = np.nan if replacement is None else float(replacement)
-        geom_cache: dict[int, object] = {}
-        mask_cache: dict[tuple, np.ndarray] = {}
         for pdf in (p for batch in it for p in tile_chunks(batch, n_bands, shape)):
-            hides = []
-            for c, r, contained, fis, feats in zip(
-                pdf["col"], pdf["row"], pdf["contained"], pdf["fis"], pdf["feats"]
-            ):
-                c, r = int(c), int(r)
-                mk = (c, r)
-                inside_mask = mask_cache.get(mk)
-                if inside_mask is None:
-                    if contained:
-                        inside_mask = np.ones(shape, dtype=bool)
-                    else:
-                        inside_mask = np.zeros(shape, dtype=bool)
-                        xs, ys = layout.pixel_centers_for_key(c, r)
-                        for fi in fis:
-                            g = geom_cache.get(int(fi))
-                            if g is None:
-                                gj = next(
-                                    f["geojson"] for f in feats
-                                    if f["feature_index"] == fi
-                                )
-                                g = parse_geometry(gj)
-                                geom_cache[int(fi)] = g
-                            inside_mask |= rasterize(g, xs, ys)
-                    mask_cache[mk] = inside_mask
-                hides.append(inside_mask if inside else ~inside_mask)
+            covered = np.array([
+                np.logical_or.reduce(
+                    [mask_of(int(fi), int(c), int(r), bool(k)) for fi in fis]
+                )
+                for c, r, k, fis in zip(pdf["col"], pdf["row"], pdf["contained"], pdf["fis"])
+            ])
+            hide = covered if inside else ~covered
             stack = decode_tiles(pdf["bands"].tolist(), ct, shape, n_bands)
-            masked = np.where(np.array(hides)[:, None], repl, stack)
-            yield pdf.drop(columns=["contained", "fis", "feats"]).assign(
+            masked = np.where(hide[:, None], repl, stack)
+            yield pdf.drop(columns=["contained", "fis"]).assign(
                 bands=encode_tiles(masked, ct)
             )
 

@@ -24,11 +24,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
-from ..core.geom import parse_geometry, rasterize as raster_mask
 from ..core.grid import LayoutDefinition
 from ..core.tiles import decode_tiles, encode_tiles, tile_chunks
 from ..sources.datacube import CubeMeta, DataCube
-from .zonal import feature_tile_keys
+from .cover import feature_geometries, feature_tile_keys, pixel_masks
 
 
 def rasterize_features(
@@ -42,21 +41,18 @@ def rasterize_features(
     (higher feature_index last). Keys with no feature are absent (sparse)."""
     ct = parse_cell_type(cell_type)
     th, tw = layout.tile_rows, layout.tile_cols
-    fkeys = feature_tile_keys(features, layout)
-    joined = fkeys.join(F.broadcast(features), "feature_index")
     vcol = value_col or "feature_index"
+    fkeys = feature_tile_keys(features, layout)
+    values = features.select(*dict.fromkeys(("feature_index", vcol)))
+    joined = fkeys.join(F.broadcast(values), "feature_index")
+    mask_of = pixel_masks(feature_geometries(features), layout)
 
     def burn(pdf: pd.DataFrame) -> pd.DataFrame:
         c = int(pdf["col"].iloc[0])
         r = int(pdf["row"].iloc[0])
-        xs, ys = layout.pixel_centers_for_key(c, r)
         out = np.full((th, tw), np.nan)
         for rec in pdf.sort_values("feature_index").itertuples(index=False):
-            if rec.contained:
-                m = np.ones((th, tw), dtype=bool)
-            else:
-                g = parse_geometry(rec.geojson)
-                m = raster_mask(g, xs, ys)
+            m = mask_of(int(rec.feature_index), c, r, bool(rec.contained))
             out[m] = float(getattr(rec, vcol))
         return pd.DataFrame(
             [(c, r, encode_tiles([[out]], ct)[0])],

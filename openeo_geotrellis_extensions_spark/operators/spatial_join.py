@@ -36,10 +36,12 @@ from pyspark.sql.types import (
 from ..core.geom import (
     classify_rect,
     clipped_area,
+    fills_bbox,
     parse_geometry,
     points_in_geometry,
 )
 from ..core.grid import GlobalGrid
+from .cover import feature_geometries
 
 
 def cell_for_point_col(res: int, x: Column, y: Column) -> Column:
@@ -169,8 +171,7 @@ def _cover_from(g, start_cell: int, res: int) -> list[tuple[int, bool]]:
 
 
 def cover_cells_for_features(
-    features: DataFrame, res: int, split_res: int = 2,
-    shuffle_split: bool = False,
+    features: DataFrame, res: int, split_res: int = 2
 ) -> DataFrame:
     """(feature_index, geojson) -> (feature_index, cell, contained) at
     resolution ``res`` via compact cover + uncompact. ``contained`` cells are
@@ -179,11 +180,9 @@ def cover_cells_for_features(
 
     Two pipelined stages: stage 1 explodes each feature into the coarse
     (``split_res``) cells its bbox touches; stage 2 computes the compact
-    cover independently per coarse cell. With ``shuffle_split=True`` a
-    repartition between them spreads a continent-sized polygon across tasks
-    (use at high executor counts / few huge features); default is
-    shuffle-free — the split rows stay with their feature's partition, so
-    parallelism follows the features DataFrame's own partitioning."""
+    cover independently per coarse cell. Shuffle-free: the split rows stay
+    with their feature's partition, so parallelism follows the features
+    DataFrame's own partitioning."""
     split_res = min(split_res, res)
 
     def split(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -206,8 +205,6 @@ def cover_cells_for_features(
     exploded = features.mapInPandas(
         split, schema="feature_index int, geojson string, split_cell long"
     )
-    if shuffle_split:
-        exploded = exploded.repartition(F.col("split_cell"), F.col("feature_index"))
 
     def cover(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         geom_cache: dict[int, object] = {}
@@ -254,15 +251,9 @@ def spatial_join_points(
     if broadcast_features:
         cover = F.broadcast(cover)
         # features are small by contract on this path (they already fit a
-        # broadcast): collect the geojson map ONCE on the driver and close
-        # over it, instead of joining geojson onto EVERY candidate row —
-        # the per-row feature text would otherwise ride the whole Arrow
-        # stream into the refine UDF (guide §4.1: pass only the columns
-        # the function needs)
-        feat_map = {
-            int(r["feature_index"]): r["geojson"]
-            for r in features.select("feature_index", "geojson").collect()
-        }
+        # broadcast): the geometry text is closed over, not joined onto
+        # every candidate row
+        feat_map = feature_geometries(features)
     else:
         feat_map = None
         feat = features
@@ -359,8 +350,6 @@ def polygon_overlap_join(
     against the feature. Features must be CONVEX single-ring polygons (the
     clip window; verified per feature, non-convex features raise);
     axis-aligned rectangles take the cheaper 4-half-plane path."""
-    from ..core.grid import Extent as _Extent
-
     cover = cover_cells_for_features(features, res).select(
         "feature_index", "cell"
     )
@@ -397,11 +386,8 @@ def polygon_overlap_join(
                 win = windows.get(int(fi))
                 if win is None:
                     fg = parse_geometry(fgj)
-                    bb = fg.bbox()
-                    if abs(
-                        clipped_area(fg, bb) - bb.width * bb.height
-                    ) <= 1e-9 * max(1.0, bb.width * bb.height):
-                        win = ("rect", _Extent(bb.xmin, bb.ymin, bb.xmax, bb.ymax))
+                    if fills_bbox(fg):
+                        win = ("rect", fg.bbox())
                     else:
                         if (
                             fg.kind != "Polygon"

@@ -15,6 +15,8 @@ dense right join against distinct-keys x labels producing EMPTY bands.
 
 from __future__ import annotations
 
+from datetime import datetime
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -33,6 +35,11 @@ def aggregate_temporal(
 ) -> DataCube:
     if len(intervals) != len(labels):
         raise ValueError("labels must match intervals")
+    for v in (*labels, *(b for iv in intervals for b in iv)):
+        try:
+            datetime.fromisoformat(v)
+        except (TypeError, ValueError):
+            raise ValueError(f"not an ISO timestamp: {v!r}") from None
     spark = cube.df.sparkSession
     comp, out_ct_name = _compile(reducer, cube)
     src_ct = cube.meta.cell_type

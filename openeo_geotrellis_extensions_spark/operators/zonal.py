@@ -34,136 +34,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..core.geom import classify_rect, parse_geometry, points_in_geometry
-from ..core.grid import LayoutDefinition
+from ..core.geom import fills_bbox, parse_geometry
 from ..core.tiles import decode_tiles, tile_chunks
 from ..sources.datacube import DataCube
-
-_KEYS_SCHEMA = StructType(
-    [
-        StructField("feature_index", IntegerType()),
-        StructField("col", IntegerType()),
-        StructField("row", IntegerType()),
-        StructField("contained", IntegerType()),  # 1 = tile fully inside feature
-    ]
-)
-
-
-def feature_tile_keys(
-    features: DataFrame, layout: LayoutDefinition, shuffle_split: bool = False
-) -> DataFrame:
-    """(feature_index, geojson) -> candidate layout tile keys, the clipToGrid
-    analog (FileLayerProvider.scala:1060-1093). Pure key metadata — no pixels
-    touched — so downstream joins prune cube partitions before any decode
-    (the reference's 'required keys before read' pushdown, SURVEY §4)."""
-
-    def block_keys(g, c0: int, c1: int, r0: int, r1: int, out: list) -> None:
-        """Quadtree subdivision over the key grid: one classify per block, so
-        a feature covering K tiles costs O(perimeter + log K) classifies
-        instead of K (the compact-cover idea applied to layout keys)."""
-        w0 = layout.extent_for_key(c0, r0)
-        w1 = layout.extent_for_key(c1, r1)
-        block = type(w0)(w0.xmin, w1.ymin, w1.xmax, w0.ymax)
-        cls = classify_rect(g, block)
-        if cls == 0:
-            return
-        if cls == 2:
-            out.append((c0, c1, r0, r1, 1))
-            return
-        if c0 == c1 and r0 == r1:
-            out.append((c0, c1, r0, r1, 0))
-            return
-        cm = (c0 + c1) // 2
-        rm = (r0 + r1) // 2
-        for cc0, cc1 in ((c0, cm), (cm + 1, c1)) if c1 > c0 else ((c0, c1),):
-            for rr0, rr1 in ((r0, rm), (rm + 1, r1)) if r1 > r0 else ((r0, r1),):
-                block_keys(g, cc0, cc1, rr0, rr1, out)
-
-    # stage 1: split each feature's key range into <=4x4 sub-ranges so huge
-    # features parallelize across tasks (one-task-per-feature was the serial
-    # bottleneck; same idea as cover_cells_for_features)
-    def split(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for fi, gj in zip(pdf["feature_index"], pdf["geojson"]):
-                g = parse_geometry(gj)
-                if g is None:
-                    continue
-                if g.kind in ("Point", "MultiPoint"):
-                    rows.append((int(fi), gj, -1, -1, -1, -1))
-                    continue
-                ks = list(layout.keys_for_extent(g.bbox()))
-                if not ks:
-                    continue
-                c0 = min(k[0] for k in ks); c1 = max(k[0] for k in ks)
-                r0 = min(k[1] for k in ks); r1 = max(k[1] for k in ks)
-                nsc = min(4, c1 - c0 + 1)
-                nsr = min(4, r1 - r0 + 1)
-                cw = -(-(c1 - c0 + 1) // nsc)
-                rw = -(-(r1 - r0 + 1) // nsr)
-                for sc in range(nsc):
-                    for sr in range(nsr):
-                        bc0 = c0 + sc * cw
-                        br0 = r0 + sr * rw
-                        if bc0 > c1 or br0 > r1:
-                            continue
-                        rows.append(
-                            (int(fi), gj, bc0, min(bc0 + cw - 1, c1),
-                             br0, min(br0 + rw - 1, r1))
-                        )
-            yield pd.DataFrame(
-                rows, columns=["feature_index", "geojson", "c0", "c1", "r0", "r1"]
-            )
-
-    exploded = features.mapInPandas(
-        split,
-        schema="feature_index int, geojson string, c0 int, c1 int, r0 int, r1 int",
-    )
-    if shuffle_split:
-        exploded = exploded.repartition(F.col("feature_index"), F.col("c0"), F.col("r0"))
-
-    def keys(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        geom_cache: dict[int, object] = {}
-        for pdf in it:
-            fis, cols, rows_, conts = [], [], [], []
-            for fi, gj, c0, c1, r0, r1 in zip(
-                pdf["feature_index"], pdf["geojson"],
-                pdf["c0"], pdf["c1"], pdf["r0"], pdf["r1"],
-            ):
-                g = geom_cache.get(int(fi))
-                if g is None:
-                    g = parse_geometry(gj)
-                    geom_cache[int(fi)] = g
-                if g.kind in ("Point", "MultiPoint"):
-                    seen = set()
-                    for px_, py_ in g.points:
-                        k = layout.key_for_point(px_, py_)
-                        if (
-                            k not in seen
-                            and 0 <= k[0] < layout.layout_cols
-                            and 0 <= k[1] < layout.layout_rows
-                        ):
-                            seen.add(k)
-                            fis.append(int(fi)); cols.append(k[0])
-                            rows_.append(k[1]); conts.append(0)
-                    continue
-                blocks: list[tuple[int, int, int, int, int]] = []
-                block_keys(g, int(c0), int(c1), int(r0), int(r1), blocks)
-                for bc0, bc1, br0, br1, cont in blocks:
-                    cc, rr = np.meshgrid(
-                        np.arange(bc0, bc1 + 1), np.arange(br0, br1 + 1)
-                    )
-                    n = cc.size
-                    fis.extend([int(fi)] * n)
-                    cols.extend(cc.ravel().tolist())
-                    rows_.extend(rr.ravel().tolist())
-                    conts.extend([cont] * n)
-            yield pd.DataFrame(
-                {"feature_index": fis, "col": cols, "row": rows_, "contained": conts}
-            )
-
-    return exploded.mapInPandas(keys, schema=_KEYS_SCHEMA)
-
+from .cover import feature_geometries, feature_tile_keys, pixel_masks
 
 _PARTIAL_SCHEMA = StructType(
     [
@@ -197,20 +71,10 @@ def aggregate_spatial(
     n_bands = cube.meta.n_bands
 
     fkeys = F.broadcast(feature_tile_keys(features, layout))
-    # geojson stays OUT of the tile join: the features on this path are
-    # broadcast-small by contract, so collect the feature map once on the
-    # driver and close over it — the polygon text would otherwise ride
-    # every (tile x feature) row through Arrow into the partials UDF
-    # (guide §4.1: pass only the columns the function needs)
-    feat_map = {
-        int(r["feature_index"]): r["geojson"]
-        for r in features.select("feature_index", "geojson").collect()
-    }
+    mask_of = pixel_masks(feature_geometries(features), layout)
     joined = cube.df.join(fkeys, ["col", "row"], "inner")
 
     def partials(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        geom_cache: dict[int, object] = {}
-        mask_cache: dict[tuple, np.ndarray] = {}
         px_area = shape[0] * shape[1]
         for full_pdf in it:
             # bounded chunks: the vectorized reduce materializes a few
@@ -227,30 +91,7 @@ def aggregate_spatial(
                 # mask; only boundary rows rasterize their geometry
                 totals = np.full(nrow, px_area, dtype=np.int64)
                 for i in np.nonzero(~contained)[0]:
-                    c, r, fi = int(cols_a[i]), int(rows_a[i]), int(fis_a[i])
-                    mkey = (fi, c, r)
-                    mask = mask_cache.get(mkey)
-                    if mask is None:
-                        g = geom_cache.get(fi)
-                        if g is None:
-                            g = parse_geometry(feat_map[fi])
-                            geom_cache[fi] = g
-                        xs, ys = layout.pixel_centers_for_key(c, r)
-                        if g.kind in ("Point", "MultiPoint"):
-                            mask = np.zeros(shape, dtype=bool)
-                            for px_, py_ in g.points:
-                                pc, pr = layout.key_for_point(px_, py_)
-                                if (pc, pr) == (c, r):
-                                    ix = int((px_ - xs[0] + layout.cell_width / 2) // layout.cell_width)
-                                    iy = int((ys[0] - py_ + layout.cell_height / 2) // layout.cell_height)
-                                    if 0 <= iy < shape[0] and 0 <= ix < shape[1]:
-                                        mask[iy, ix] = True
-                        else:
-                            gx, gy = np.meshgrid(xs, ys)
-                            mask = points_in_geometry(
-                                g, gx.ravel(), gy.ravel()
-                            ).reshape(shape)
-                        mask_cache[mkey] = mask
+                    mask = mask_of(int(fis_a[i]), int(cols_a[i]), int(rows_a[i]), False)
                     # apply boundary mask IN PLACE on the owned decode buffer
                     cube_vals[i, :, ~mask] = np.nan
                     totals[i] = int(mask.sum())
@@ -308,21 +149,32 @@ def aggregate_spatial(
         F.sqrt(F.greatest(var, F.lit(0.0))).alias("sd"),
     )
 
-    # dense restore: every (date, feature, band) present even with 0 pixels
-    # (distinct_times uses the constructor's cheap pre-Python lineage when
-    # available — the full cube.df branch would re-run the opaque tile
-    # stage just to enumerate dates)
+    return _dense(cube, features, stats, "count", 0, round_to)
+
+
+def _dense(
+    cube: DataCube, features: DataFrame, stats: DataFrame, count_col: str,
+    zero, round_to: int | None,
+) -> DataFrame:
+    """Dense restore: every (date, feature, band) present even with 0 pixels
+    (``count_col`` = ``zero``); the double-valued columns rounded to
+    ``round_to`` places. distinct_times uses the constructor's cheap
+    pre-Python lineage when available — the full cube.df branch would re-run
+    the opaque tile stage just to enumerate dates."""
     dates = cube.distinct_times()
-    bands_df = dates.sparkSession.range(n_bands).select(F.col("id").cast("int").alias("band"))
+    bands_df = dates.sparkSession.range(cube.meta.n_bands).select(
+        F.col("id").cast("int").alias("band")
+    )
     full = dates.crossJoin(F.broadcast(features.select("feature_index"))).crossJoin(
         F.broadcast(bands_df)
     )
     out = full.join(stats, ["time", "feature_index", "band"], "left").withColumn(
-        "count", F.coalesce(F.col("count"), F.lit(0))
+        count_col, F.coalesce(F.col(count_col), F.lit(zero))
     )
     if round_to is not None:
-        for c in ("sum", "min", "max", "mean", "variance", "sd"):
-            out = out.withColumn(c, F.round(F.col(c), round_to))
+        for f in out.schema.fields:
+            if isinstance(f.dataType, DoubleType):
+                out = out.withColumn(f.name, F.round(F.col(f.name), round_to))
     return out
 
 
@@ -445,20 +297,11 @@ def aggregate_spatial_weighted(
     n_bands = cube.meta.n_bands
 
     fkeys = F.broadcast(feature_tile_keys(features, layout))
-    # driver-side feature map instead of a geojson join (see
-    # aggregate_spatial: broadcast-small features by contract)
-    feat_map = {
-        int(r["feature_index"]): r["geojson"]
-        for r in features.select("feature_index", "geojson").collect()
-    }
+    feat_map = feature_geometries(features)
     joined = cube.df.join(fkeys, ["col", "row"], "inner")
 
-    from ..core.geom import clipped_area
-    from ..core.grid import Extent as _Extent
-
     def partials(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        geom_cache: dict[int, object] = {}
-        rect_cache: dict[int, object] = {}
+        geom_cache: dict[int, tuple] = {}  # fi -> (geometry, bbox if a rectangle)
         wq_cache: dict[tuple, np.ndarray] = {}
         h, w = shape
         cw, ch = layout.cell_width, layout.cell_height
@@ -469,9 +312,11 @@ def aggregate_spatial_weighted(
             wq = wq_cache.get(key)
             if wq is not None:
                 return wq
-            g = geom_cache.get(fi)
+            if fi not in geom_cache:
+                g = parse_geometry(feat_map[fi])
+                geom_cache[fi] = (g, g.bbox() if fills_bbox(g) else None)
+            g, bb = geom_cache[fi]
             te = layout.extent_for_key(c, r)
-            bb = rect_cache.get(fi)
             if bb is not None:  # rect feature: separable exact overlap
                 px0 = te.xmin + np.arange(w) * cw
                 px1 = te.xmin + (np.arange(w) + 1) * cw
@@ -504,16 +349,6 @@ def aggregate_spatial_weighted(
             out_rows = {k: [] for k in ("time", "fi", "band", "qcnt", "qsum")}
             for i in range(nrow):
                 fi = int(fis_a[i])
-                if fi not in geom_cache:
-                    g = parse_geometry(feat_map[fi])
-                    geom_cache[fi] = g
-                    bb = g.bbox()
-                    if (
-                        g.kind not in ("Point", "MultiPoint")
-                        and abs(clipped_area(g, bb) - bb.width * bb.height)
-                        <= 1e-9 * max(1.0, bb.width * bb.height)
-                    ):
-                        rect_cache[fi] = bb
                 wq = (
                     full_wq
                     if contained[i]
@@ -556,17 +391,4 @@ def aggregate_spatial_weighted(
         (F.col("_qs") / F.lit(1_000_000.0)).alias("wsum"),
         F.when(F.col("_qc") > 0, F.col("_qs") / F.col("_qc")).alias("wmean"),
     )
-    dates = cube.distinct_times()
-    bands_df = dates.sparkSession.range(n_bands).select(
-        F.col("id").cast("int").alias("band")
-    )
-    full = dates.crossJoin(F.broadcast(features.select("feature_index"))).crossJoin(
-        F.broadcast(bands_df)
-    )
-    out = full.join(stats, ["time", "feature_index", "band"], "left").withColumn(
-        "wcount", F.coalesce(F.col("wcount"), F.lit(0.0))
-    )
-    if round_to is not None:
-        for c in ("wcount", "wsum", "wmean"):
-            out = out.withColumn(c, F.round(F.col(c), round_to))
-    return out
+    return _dense(cube, features, stats, "wcount", 0.0, round_to)

@@ -433,9 +433,7 @@ def save_sample_geotiffs(cube: DataCube, features, out_dir: str) -> pd.DataFrame
     feature's tile keys and written BY EXECUTORS — the saveSamples /
     groupByFeatureAndWriteToTiff path (geotiff/package.scala:748-827).
     Returns index (feature_index, date, path, n_tiles)."""
-    from pyspark.sql import functions as F
-
-    from ..operators.zonal import feature_tile_keys
+    from ..operators.cover import feature_tiles
 
     os.makedirs(out_dir, exist_ok=True)
     ld = cube.meta.layout
@@ -444,17 +442,7 @@ def save_sample_geotiffs(cube: DataCube, features, out_dir: str) -> pd.DataFrame
     th, tw = ld.tile_rows, ld.tile_cols
     temporal = cube.meta.temporal
 
-    fkeys = feature_tile_keys(features, ld)
-    # bounds come from the feature's FULL key cover, not the surviving
-    # tiles: a dropped all-nodata tile (interior OR boundary) must stay a
-    # nodata hole so every (feature, date) file shares one shape/extent
-    fbounds = fkeys.groupBy("feature_index").agg(
-        F.min("col").alias("_fc0"), F.max("col").alias("_fc1"),
-        F.min("row").alias("_fr0"), F.max("row").alias("_fr1"),
-    )
-    joined = cube.df.join(F.broadcast(fkeys), ["col", "row"], "inner").join(
-        F.broadcast(fbounds), "feature_index"
-    )
+    joined = feature_tiles(cube.df, features, ld)
     keys = ["feature_index"] + (["time"] if temporal else [])
 
     def write_sample(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -23,7 +23,7 @@ import pandas as pd
 
 from ..core.celltype import parse_cell_type
 from ..core.tiles import decode_tiles, encode_tiles, tile_chunks
-from ..operators.zonal import feature_tile_keys
+from ..operators.cover import feature_tiles
 from ..sources.datacube import DataCube
 from .netcdf_format import (
     NcVar,
@@ -163,18 +163,7 @@ def save_samples(cube: DataCube, features, out_dir: str) -> pd.DataFrame:
     # not capture `cube` (its df holds the SparkContext, unpicklable)
     crs = ld.crs
 
-    from pyspark.sql import functions as F
-
-    fkeys = feature_tile_keys(features, ld)
-    # bounds from the feature's FULL key cover (see save_sample_geotiffs):
-    # dropped boundary tiles must not shrink/shift the sample array
-    fbounds = fkeys.groupBy("feature_index").agg(
-        F.min("col").alias("_fc0"), F.max("col").alias("_fc1"),
-        F.min("row").alias("_fr0"), F.max("row").alias("_fr1"),
-    )
-    joined = cube.df.join(F.broadcast(fkeys), ["col", "row"], "inner").join(
-        F.broadcast(fbounds), "feature_index"
-    )
+    joined = feature_tiles(cube.df, features, ld)
 
     def write_sample(pdf: pd.DataFrame) -> pd.DataFrame:
         fi = int(pdf["feature_index"].iloc[0])

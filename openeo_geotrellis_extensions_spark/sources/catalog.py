@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..core.celltype import parse_cell_type
 from ..core.grid import Extent, LayoutDefinition
-from ..operators.zonal import feature_tile_keys
+from ..operators.cover import feature_tile_keys
 from .datacube import CubeMeta, DataCube, cube_schema
 from .interleaved import DATES
 
@@ -112,6 +112,21 @@ READ_FULL_THRESHOLD = 0.5
 CATALOG_CELL_TYPE = "uint8ud255"
 
 
+def _footprint_keys(cat: DataFrame, layout: LayoutDefinition) -> DataFrame:
+    """(product_index, col, row, contained): the layout keys each product's
+    footprint rectangle covers."""
+    feats = cat.select(
+        F.col("product_index").alias("feature_index"),
+        F.format_string(
+            '{"type": "Polygon", "coordinates": [[[%s, %s], [%s, %s], [%s, %s], [%s, %s], [%s, %s]]]}',
+            "xmin", "ymin", "xmax", "ymin", "xmax", "ymax", "xmin", "ymax", "xmin", "ymin",
+        ).alias("geojson"),
+    )
+    return feature_tile_keys(feats, layout).withColumnRenamed(
+        "feature_index", "product_index"
+    )
+
+
 def load_collection(
     catalog: DataFrame,
     layout: LayoutDefinition,
@@ -146,16 +161,7 @@ def load_collection(
         )
 
     # 2. requested keys ∩ product footprint keys (clipToGrid analog)
-    feats = cat.select(
-        "product_index",
-        F.format_string(
-            '{"type": "Polygon", "coordinates": [[[%s, %s], [%s, %s], [%s, %s], [%s, %s], [%s, %s]]]}',
-            "xmin", "ymin", "xmax", "ymin", "xmax", "ymax", "xmin", "ymax", "xmin", "ymin",
-        ).alias("geojson"),
-    ).withColumnRenamed("product_index", "feature_index")
-    pkeys = feature_tile_keys(feats, layout).withColumnRenamed(
-        "feature_index", "product_index"
-    )
+    pkeys = _footprint_keys(cat, layout)
     req = Extent(
         max(bbox.xmin, layout.extent.xmin), max(bbox.ymin, layout.extent.ymin),
         min(bbox.xmax, layout.extent.xmax), min(bbox.ymax, layout.extent.ymax),
@@ -317,16 +323,6 @@ def sampled_features(
         (F.col("xmin") < bbox.xmax) & (F.col("xmax") > bbox.xmin)
         & (F.col("ymin") < bbox.ymax) & (F.col("ymax") > bbox.ymin)
     )
-    feats = cat.select(
-        "product_index",
-        F.format_string(
-            '{"type": "Polygon", "coordinates": [[[%s, %s], [%s, %s], [%s, %s], [%s, %s], [%s, %s]]]}',
-            "xmin", "ymin", "xmax", "ymin", "xmax", "ymax", "xmin", "ymax", "xmin", "ymin",
-        ).alias("geojson"),
-    ).withColumnRenamed("product_index", "feature_index")
-    pkeys = feature_tile_keys(feats, layout).withColumnRenamed(
-        "feature_index", "product_index"
-    )
-    return pkeys.join(cat, "product_index").select(
+    return _footprint_keys(cat, layout).join(cat, "product_index").select(
         "date", "col", "row", "product_id", "product_index"
     )

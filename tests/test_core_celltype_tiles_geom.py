@@ -101,7 +101,7 @@ def test_decode_tile_float_nan():
 
 
 CODEC_CTS = ["uint8", "uint8raw", "uint8ud255", "int16", "int32", "float32",
-             "float32raw", "float64"]
+             "float32raw", "float32ud-9999", "float64"]
 
 
 @pytest.mark.parametrize("name", CODEC_CTS)

@@ -260,6 +260,16 @@ def test_aggregate_temporal_dense_fill_and_half_open(spark):
     assert np.isnan(t[("2019-01-01", 0, 0)]).all()
 
 
+def test_aggregate_temporal_rejects_non_timestamp_labels(spark):
+    """A label or interval bound that is not an ISO timestamp fails at the
+    call, not later inside a Spark job."""
+    cube = constant_cube(spark, LAYOUT, band_values=[10], cell_type="uint8ud255")
+    with pytest.raises(ValueError, match="'x'"):
+        aggregate_temporal(cube, [("2017-01-01", "2017-02-01")], labels=["x"])
+    with pytest.raises(ValueError, match="'later'"):
+        aggregate_temporal(cube, [("2017-01-01", "later")], labels=["2017-01-01"])
+
+
 def test_aggregate_temporal_period_month(spark):
     cube = arithmetic_cube(spark, LAYOUT, n_bands=1)
     out = aggregate_temporal_period(cube, "month", reducer="max")

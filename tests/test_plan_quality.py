@@ -141,7 +141,6 @@ def test_no_unjustified_cartesian_in_any_registered_query(spark):
         "zonal_weighted",      # dense restore: crossJoin of tiny date/band dims
         "hist_quantiles",      # crossJoin(broadcast(totals)), a single scalar row
         "aggregate_temporal",  # dense interval fill: tiny interval dim
-        "mask_polygon",        # crossJoin(broadcast(ONE row of collected feats))
     }
     streaming = {"stream_windowed", "stream_dedup_stateful"}  # plans materialize in sinks
     for name, fn in m.queries().items():

@@ -11,10 +11,8 @@ from pyspark.sql import functions as F
 
 from openeo_geotrellis_extensions_spark.core.geom import parse_geometry, rasterize
 from openeo_geotrellis_extensions_spark.core.grid import Extent, LayoutDefinition
-from openeo_geotrellis_extensions_spark.operators.zonal import (
-    aggregate_spatial,
-    feature_tile_keys,
-)
+from openeo_geotrellis_extensions_spark.operators.cover import feature_tile_keys
+from openeo_geotrellis_extensions_spark.operators.zonal import aggregate_spatial
 from openeo_geotrellis_extensions_spark.sources.datacube import (
     arithmetic_cube,
     constant_cube,
