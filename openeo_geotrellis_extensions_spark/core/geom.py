@@ -433,6 +433,26 @@ def fills_bbox(geom: Geometry) -> bool:
     return abs(clipped_area(geom, bb) - area) <= 1e-9 * max(1.0, area)
 
 
+def rectangle_extent(geom: Geometry) -> Extent | None:
+    """The bbox when ``geom`` is exactly an axis-aligned rectangle, else None.
+
+    Exact, with no area tolerance (unlike :func:`fills_bbox`): one Polygon
+    with one ring of four distinct vertices, all at bbox corners, joined by
+    axis-aligned edges. A bow-tie through the same corners has diagonal
+    edges and is not a rectangle."""
+    if geom.kind != "Polygon" or len(geom.polygons[0]) != 1:
+        return None
+    ring = geom.polygons[0][0]
+    if len(ring) == 5 and (ring[0] == ring[-1]).all():
+        ring = ring[:-1]
+    bb = geom.bbox()
+    corners = {(bb.xmin, bb.ymin), (bb.xmax, bb.ymin), (bb.xmax, bb.ymax), (bb.xmin, bb.ymax)}
+    if len(ring) != 4 or len(corners) != 4 or set(map(tuple, ring.tolist())) != corners:
+        return None
+    d = np.roll(ring, -1, axis=0) - ring
+    return bb if ((d[:, 0] == 0) != (d[:, 1] == 0)).all() else None
+
+
 def reproject_geometry(
     geom: Geometry, src_crs: str, dst_crs: str, densify: int = 0
 ) -> Geometry:

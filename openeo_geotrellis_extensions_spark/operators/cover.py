@@ -10,7 +10,16 @@ join, the catalog source and the sample sinks all use it:
 
   - :func:`feature_tile_keys` — the tiles: ``(feature_index, col, row,
     contained)`` rows, ``contained = 1`` when the tile lies wholly inside
-    the feature (:func:`feature_tiles` adds each feature's key bounds);
+    the feature (:func:`feature_tiles` adds each feature's key bounds).
+    Python emits quadtree blocks of keys (:func:`cover_blocks`) and the
+    JVM expands them. An axis-aligned rectangle is classified exactly, in
+    O(1) per block, with CLOSED containment: a tile inside the closed
+    rectangle is contained even when its edges lie on the rectangle's
+    (its pixel centres lie strictly inside, and every pixel has area
+    weight 1); a tile whose open intersection with it is empty is not
+    covered; any other tile is boundary. Other polygons keep
+    :func:`core.geom.classify_rect`, which calls a tile that touches the
+    feature's edge boundary;
   - :func:`feature_geometries` — the one ``collect()`` of
     ``{feature_index: geojson}``; features are broadcast-small on every
     path that uses it, so geometry text is closed over instead of joined
@@ -31,131 +40,98 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..core.geom import classify_rect, parse_geometry, rasterize
-from ..core.grid import LayoutDefinition
-
-_KEYS_SCHEMA = StructType(
-    [
-        StructField("feature_index", IntegerType()),
-        StructField("col", IntegerType()),
-        StructField("row", IntegerType()),
-        StructField("contained", IntegerType()),  # 1 = tile fully inside feature
-    ]
+from ..core.geom import (
+    CONTAINS,
+    DISJOINT,
+    INTERSECTS,
+    Geometry,
+    classify_rect,
+    parse_geometry,
+    rasterize,
+    rectangle_extent,
 )
+from ..core.grid import Extent, LayoutDefinition
 
 
-def feature_tile_keys(features: DataFrame, layout: LayoutDefinition) -> DataFrame:
-    """(feature_index, geojson) -> candidate layout tile keys, the clipToGrid
-    analog (FileLayerProvider.scala:1060-1093). Pure key metadata — no pixels
-    touched — so downstream joins prune cube partitions before any decode
-    (the reference's 'required keys before read' pushdown, SURVEY §4)."""
+def cover_blocks(g: Geometry, layout: LayoutDefinition) -> list[tuple[int, int, int, int, int]]:
+    """``(c0, c1, r0, r1, contained)`` inclusive key blocks that together
+    cover geometry ``g`` on ``layout`` — a quadtree over the key range of
+    the bbox, one classify per block, so a feature covering K tiles costs
+    O(perimeter + log K) classifies and emits O(perimeter) blocks, not K
+    keys. A rectangle is classified in O(1) with closed containment; any
+    other polygon by :func:`core.geom.classify_rect`. Each key of a point
+    is a 1x1 boundary block."""
+    if g.kind in ("Point", "MultiPoint"):
+        keys = dict.fromkeys(layout.key_for_point(x, y) for x, y in g.points)
+        return [
+            (c, c, r, r, 0)
+            for c, r in keys
+            if 0 <= c < layout.layout_cols and 0 <= r < layout.layout_rows
+        ]
+    rect = rectangle_extent(g)
 
-    def block_keys(g, c0: int, c1: int, r0: int, r1: int, out: list) -> None:
-        """Quadtree subdivision over the key grid: one classify per block, so
-        a feature covering K tiles costs O(perimeter + log K) classifies
-        instead of K (the compact-cover idea applied to layout keys)."""
+    def classify(e: Extent) -> int:
+        if rect is None:
+            return classify_rect(g, e)
+        return CONTAINS if rect.contains(e) else INTERSECTS if rect.intersects(e) else DISJOINT
+
+    out: list[tuple[int, int, int, int, int]] = []
+
+    def block_keys(c0: int, c1: int, r0: int, r1: int) -> None:
         w0 = layout.extent_for_key(c0, r0)
         w1 = layout.extent_for_key(c1, r1)
-        block = type(w0)(w0.xmin, w1.ymin, w1.xmax, w0.ymax)
-        cls = classify_rect(g, block)
-        if cls == 0:
+        cls = classify(Extent(w0.xmin, w1.ymin, w1.xmax, w0.ymax))
+        if cls == DISJOINT:
             return
-        if cls == 2:
-            out.append((c0, c1, r0, r1, 1))
-            return
-        if c0 == c1 and r0 == r1:
-            out.append((c0, c1, r0, r1, 0))
+        if cls == CONTAINS or (c0 == c1 and r0 == r1):
+            out.append((c0, c1, r0, r1, int(cls == CONTAINS)))
             return
         cm = (c0 + c1) // 2
         rm = (r0 + r1) // 2
         for cc0, cc1 in ((c0, cm), (cm + 1, c1)) if c1 > c0 else ((c0, c1),):
             for rr0, rr1 in ((r0, rm), (rm + 1, r1)) if r1 > r0 else ((r0, r1),):
-                block_keys(g, cc0, cc1, rr0, rr1, out)
+                block_keys(cc0, cc1, rr0, rr1)
 
-    # stage 1: split each feature's key range into <=4x4 sub-ranges so huge
-    # features parallelize across tasks (one-task-per-feature was the serial
-    # bottleneck; same idea as cover_cells_for_features)
-    def split(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    c0, r0, c1, r1 = layout.key_bounds_for_extent(g.bbox())
+    if rect is not None:
+        # one key of margin: the bounds' float division can round away a
+        # sliver that the exact rectangle test keeps
+        c0, r0 = max(c0 - 1, 0), max(r0 - 1, 0)
+        c1 = min(c1 + 1, layout.layout_cols - 1)
+        r1 = min(r1 + 1, layout.layout_rows - 1)
+    if c0 <= c1 and r0 <= r1:
+        block_keys(c0, c1, r0, r1)
+    return out
+
+
+def feature_tile_keys(features: DataFrame, layout: LayoutDefinition) -> DataFrame:
+    """(feature_index, geojson) -> (feature_index, col, row, contained)
+    candidate layout tile keys, the clipToGrid analog
+    (FileLayerProvider.scala:1060-1093). Pure key metadata — no pixels
+    touched — so downstream joins prune cube partitions before any decode
+    (the reference's 'required keys before read' pushdown, SURVEY §4).
+    Python emits one row per :func:`cover_blocks` block; the JVM expands
+    the blocks to keys."""
+
+    def blocks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
             for fi, gj in zip(pdf["feature_index"], pdf["geojson"]):
                 g = parse_geometry(gj)
-                if g is None:
-                    continue
-                if g.kind in ("Point", "MultiPoint"):
-                    rows.append((int(fi), gj, -1, -1, -1, -1))
-                    continue
-                ks = list(layout.keys_for_extent(g.bbox()))
-                if not ks:
-                    continue
-                c0 = min(k[0] for k in ks); c1 = max(k[0] for k in ks)
-                r0 = min(k[1] for k in ks); r1 = max(k[1] for k in ks)
-                nsc = min(4, c1 - c0 + 1)
-                nsr = min(4, r1 - r0 + 1)
-                cw = -(-(c1 - c0 + 1) // nsc)
-                rw = -(-(r1 - r0 + 1) // nsr)
-                for sc in range(nsc):
-                    for sr in range(nsr):
-                        bc0 = c0 + sc * cw
-                        br0 = r0 + sr * rw
-                        if bc0 > c1 or br0 > r1:
-                            continue
-                        rows.append(
-                            (int(fi), gj, bc0, min(bc0 + cw - 1, c1),
-                             br0, min(br0 + rw - 1, r1))
-                        )
-            yield pd.DataFrame(
-                rows, columns=["feature_index", "geojson", "c0", "c1", "r0", "r1"]
-            )
+                if g is not None:
+                    rows.extend((int(fi), *b) for b in cover_blocks(g, layout))
+            yield pd.DataFrame(rows, columns=["feature_index", "c0", "c1", "r0", "r1", "contained"])
 
-    exploded = features.mapInPandas(
-        split,
-        schema="feature_index int, geojson string, c0 int, c1 int, r0 int, r1 int",
+    return (
+        features.mapInPandas(
+            blocks,
+            schema="feature_index int, c0 int, c1 int, r0 int, r1 int, contained int",
+        )
+        .withColumn("col", F.explode(F.sequence("c0", "c1")))
+        .withColumn("row", F.explode(F.sequence("r0", "r1")))
+        .select("feature_index", "col", "row", "contained")
     )
-
-    def keys(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        geom_cache: dict[int, object] = {}
-        for pdf in it:
-            fis, cols, rows_, conts = [], [], [], []
-            for fi, gj, c0, c1, r0, r1 in zip(
-                pdf["feature_index"], pdf["geojson"],
-                pdf["c0"], pdf["c1"], pdf["r0"], pdf["r1"],
-            ):
-                g = geom_cache.get(int(fi))
-                if g is None:
-                    g = parse_geometry(gj)
-                    geom_cache[int(fi)] = g
-                if g.kind in ("Point", "MultiPoint"):
-                    seen = set()
-                    for px_, py_ in g.points:
-                        k = layout.key_for_point(px_, py_)
-                        if (
-                            k not in seen
-                            and 0 <= k[0] < layout.layout_cols
-                            and 0 <= k[1] < layout.layout_rows
-                        ):
-                            seen.add(k)
-                            fis.append(int(fi)); cols.append(k[0])
-                            rows_.append(k[1]); conts.append(0)
-                    continue
-                blocks: list[tuple[int, int, int, int, int]] = []
-                block_keys(g, int(c0), int(c1), int(r0), int(r1), blocks)
-                for bc0, bc1, br0, br1, cont in blocks:
-                    cc, rr = np.meshgrid(
-                        np.arange(bc0, bc1 + 1), np.arange(br0, br1 + 1)
-                    )
-                    n = cc.size
-                    fis.extend([int(fi)] * n)
-                    cols.extend(cc.ravel().tolist())
-                    rows_.extend(rr.ravel().tolist())
-                    conts.extend([cont] * n)
-            yield pd.DataFrame(
-                {"feature_index": fis, "col": cols, "row": rows_, "contained": conts}
-            )
-
-    return exploded.mapInPandas(keys, schema=_KEYS_SCHEMA)
 
 
 def feature_tiles(tiles: DataFrame, features: DataFrame, layout: LayoutDefinition) -> DataFrame:

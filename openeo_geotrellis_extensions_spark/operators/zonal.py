@@ -45,7 +45,6 @@ _PARTIAL_SCHEMA = StructType(
         StructField("feature_index", IntegerType()),
         StructField("band", IntegerType()),
         StructField("cnt", LongType()),
-        StructField("total", LongType()),  # valid + nodata pixels in zone
         StructField("sm", DoubleType()),
         StructField("mn", DoubleType()),
         StructField("mx", DoubleType()),
@@ -75,12 +74,10 @@ def aggregate_spatial(
     joined = cube.df.join(fkeys, ["col", "row"], "inner")
 
     def partials(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        px_area = shape[0] * shape[1]
         for full_pdf in it:
             # bounded chunks: the vectorized reduce materializes a few
             # (rows, nb, h, w) float64 temporaries
             for pdf in tile_chunks(full_pdf, n_bands, shape):
-                nrow = len(pdf)
                 # one decode pass for the chunk: (n, nb, h, w) with NaN
                 cube_vals = decode_tiles(pdf["bands"].tolist(), ct_name, shape, n_bands)
                 contained = pdf["contained"].to_numpy(dtype=bool)
@@ -89,12 +86,10 @@ def aggregate_spatial(
                 fis_a = pdf["feature_index"].to_numpy()
                 # interior ('contained') rows keep the implicit all-ones
                 # mask; only boundary rows rasterize their geometry
-                totals = np.full(nrow, px_area, dtype=np.int64)
                 for i in np.nonzero(~contained)[0]:
                     mask = mask_of(int(fis_a[i]), int(cols_a[i]), int(rows_a[i]), False)
                     # apply boundary mask IN PLACE on the owned decode buffer
                     cube_vals[i, :, ~mask] = np.nan
-                    totals[i] = int(mask.sum())
                 # vectorized per-(row, band) stats; temporaries are created
                 # one at a time and freed, each bounded by chunk_rows
                 valid = ~np.isnan(cube_vals)
@@ -109,17 +104,16 @@ def aggregate_spatial(
                 np.copyto(tmp, -np.inf, where=~valid)
                 mx = tmp.max(axis=(2, 3))
                 del tmp, valid
-                # emit only (row, band) cells with >=1 valid pixel in a
-                # non-empty zone — NaN partials would poison group min/max;
+                # emit only (row, band) cells with >=1 valid pixel (masked-out
+                # pixels are NaN) — NaN partials would poison group min/max;
                 # dense restore fills the missing rows downstream
-                ri, bi = np.nonzero((cnt > 0) & (totals[:, None] > 0))
+                ri, bi = np.nonzero(cnt > 0)
                 yield pd.DataFrame(
                     {
                         "time": pdf["time"].to_numpy()[ri],
                         "feature_index": fis_a[ri],
                         "band": bi.astype(np.int32),
                         "cnt": cnt[ri, bi].astype(np.int64),
-                        "total": totals[ri],
                         "sm": sm[ri, bi],
                         "mn": mn[ri, bi],
                         "mx": mx[ri, bi],

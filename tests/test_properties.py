@@ -1,9 +1,9 @@
 """Property-based invariants (hypothesis) for the core math the whole engine
 rests on: grid key round-trips, cell encode/decode, cell-type promotion
-algebra, PIP consistency, tile codec."""
+algebra, PIP consistency, tile codec, rectangle feature covers."""
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import assume, given, settings
 from hypothesis import strategies as st
 
 from openeo_geotrellis_extensions_spark.core.celltype import (
@@ -19,6 +19,7 @@ from openeo_geotrellis_extensions_spark.core.grid import (
     GlobalGrid,
     LayoutDefinition,
 )
+from openeo_geotrellis_extensions_spark.core.geom import rectangle_extent
 from openeo_geotrellis_extensions_spark.core.tiles import (
     MAX_CHUNK_VALUES,
     decode_band,
@@ -209,3 +210,69 @@ def test_zindex3_bit_exact_and_ordering(c, r, t):
         assert int(zindex3([c + 1], [r], [t])[0]) > z
     if t + 1 < (1 << 21):
         assert int(zindex3([c], [r], [t + 1])[0]) > z
+
+
+def _tile_units(n):
+    """A coordinate in tile units: on the tile lattice or off it, reaching
+    up to two tiles past either side of an ``n``-tile axis."""
+    return st.one_of(
+        st.integers(-2, n + 2).map(float),
+        st.floats(-2, n + 2, allow_nan=False, allow_infinity=False),
+    )
+
+
+@st.composite
+def _rect_on_layout(draw):
+    cols, rows = draw(st.integers(1, 6)), draw(st.integers(1, 6))
+    ox, oy = draw(st.integers(-5, 5)), draw(st.integers(-5, 5))
+    tw, th = draw(st.sampled_from([0.5, 1.0, 1.5, 3.0])), draw(st.sampled_from([0.5, 1.0, 2.0]))
+    px = draw(st.sampled_from([1, 2, 5]))
+    layout = LayoutDefinition(Extent(ox, oy, ox + cols * tw, oy + rows * th), cols, rows, px, px)
+    us = sorted(draw(st.lists(_tile_units(cols), min_size=2, max_size=2, unique=True)))
+    vs = sorted(draw(st.lists(_tile_units(rows), min_size=2, max_size=2, unique=True)))
+    e = layout.extent
+    x0, x1 = (e.xmin + u * layout.tile_width for u in us)
+    y0, y1 = (e.ymin + v * layout.tile_height for v in vs)
+    assume(x0 < x1 and y0 < y1)
+    ring = [[x0, y0], [x1, y0], [x1, y1], [x0, y1]]
+    start = draw(st.integers(0, 3))
+    ring = ring[start:] + ring[:start]
+    if draw(st.booleans()):
+        ring = ring[::-1]
+    return layout, ring + [ring[0]]
+
+
+@given(_rect_on_layout())
+@settings(max_examples=300, deadline=None)
+def test_rectangle_cover_is_exact(case):
+    """A rectangle covers exactly the layout tiles it overlaps with positive
+    area, and every tile it calls contained is wholly inside it, with every
+    pixel centre in its mask."""
+    import json
+
+    from openeo_geotrellis_extensions_spark.operators.cover import cover_blocks, pixel_masks
+
+    layout, ring = case
+    gj = json.dumps({"type": "Polygon", "coordinates": [ring]})
+    g = from_geojson(gj)
+    rect = rectangle_extent(g)
+    assert rect is not None
+    assert rect.width > 0 and rect.height > 0
+    keys = {
+        (c, r): k
+        for c0, c1, r0, r1, k in cover_blocks(g, layout)
+        for c in range(c0, c1 + 1)
+        for r in range(r0, r1 + 1)
+    }
+    want = {
+        (c, r)
+        for c in range(layout.layout_cols)
+        for r in range(layout.layout_rows)
+        if rect.intersects(layout.extent_for_key(c, r))
+    }
+    assert set(keys) == want
+    mask_of = pixel_masks({0: gj}, layout)
+    for (c, r), k in keys.items():
+        if k:
+            assert rect.contains(layout.extent_for_key(c, r))
+            assert mask_of(0, c, r, False).all()
