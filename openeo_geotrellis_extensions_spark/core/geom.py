@@ -1,10 +1,10 @@
 """Pure-numpy planar geometry — the engine's replacement for JTS/Shapely.
 
 No geo libraries exist in this environment, so GeoJSON/WKT parsing,
-vectorized point-in-polygon, rectangle classification (for compact cell
-covers), rasterization by pixel-center test, and point->polygon distance are
-implemented here directly. All hot paths are vectorized numpy, designed to be
-called from Arrow pandas UDFs on batches.
+vectorized point-in-polygon, rectangle classification (for the feature
+cover's quadtree), rasterization by pixel-center test, and point->polygon
+distance are implemented here directly. All hot paths are vectorized numpy,
+designed to be called from Arrow pandas UDFs on batches.
 
 Reference parity notes:
   - ProjectedPolygons (WKT/GeoJSON ingestion): openeo-geotrellis/.../ProjectedPolygons.scala:41-175
@@ -192,7 +192,7 @@ def points_in_geometry(geom: Geometry, xs: np.ndarray, ys: np.ndarray) -> np.nda
 
 
 # ---------------------------------------------------------------------------
-# Rectangle vs geometry classification (drives compact covers)
+# Rectangle vs geometry classification (drives the feature cover's quadtree)
 # ---------------------------------------------------------------------------
 
 
@@ -234,7 +234,8 @@ def _segments_intersect_rect(p0: np.ndarray, p1: np.ndarray, e: Extent) -> bool:
 
 def classify_rect(geom: Geometry, e: Extent) -> int:
     """CONTAINS(2) if the geometry fully covers rect ``e``; INTERSECTS(1) if
-    partial overlap; DISJOINT(0) otherwise. Used by GlobalGrid.compact_cover."""
+    partial overlap; DISJOINT(0) otherwise. Used by operators.cover.cover_blocks
+    for every geometry that is not an axis-aligned rectangle."""
     if geom.kind in ("Point", "MultiPoint"):
         p = geom.points
         inside = (

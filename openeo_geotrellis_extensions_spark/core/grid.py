@@ -9,9 +9,10 @@ Reference semantics mirrored (citations into /root/reference):
   - Z-curve (Morton) ordering of (col, row) mirrors the ``SpacePartitioner``
     ``PartitionerIndex`` at geotrellis-common/.../package.scala:38-56 — here it
     is just a sortable/partitionable int64 column, never a custom partitioner.
-  - hierarchical cells (zoom, x, y) with compact covers are our H3/S2 analog
-    (BASELINE north_star): a quadtree over the world extent, encoded into one
-    int64 so cell ids are plain join/partition keys.
+  - hierarchical cells (zoom, x, y) are our H3/S2 analog (BASELINE
+    north_star): a quadtree over the world extent, encoded into one int64 so
+    cell ids are plain join/partition keys; at each zoom the cells are the
+    keys of a layout (``GlobalGrid.layout``), covered like any layout.
 
 Everything here is driver-side scalar math or vectorized numpy — no Spark
 imports — so it can run inside pandas UDFs untouched.
@@ -293,9 +294,9 @@ class GlobalGrid:
     """Hierarchical cell grid: at resolution r the world is 2^(r+1) x 2^r
     square cells (two root cells side by side, like the WGS84 TMS scheme).
 
-    Cell id encoding (int64): ``res << 56 | x << 28 | y``. Parent/child are
-    pure bit shifts, so compact covers, k-rings and resolution-adaptive
-    tiling are integer arithmetic — usable as join/partition keys directly.
+    Cell id encoding (int64): ``res << 56 | x << 28 | y``, so cell lookups
+    and k-rings are integer arithmetic — usable as join/partition keys
+    directly. Covers go through :meth:`layout`.
     """
 
     extent = WORLD_EXTENT
@@ -307,6 +308,12 @@ class GlobalGrid:
     @staticmethod
     def cell_size(res: int) -> float:
         return 180.0 / (2**res)
+
+    @classmethod
+    def layout(cls, res: int) -> LayoutDefinition:
+        """The grid at ``res`` as a layout of 1x1-pixel tiles: cell
+        ``(x, y)`` is key ``(x, ny - 1 - y)`` (layout rows grow southward)."""
+        return LayoutDefinition(cls.extent, *cls.n_cells(res), 1, 1)
 
     @staticmethod
     def encode(res, x, y):
@@ -341,25 +348,6 @@ class GlobalGrid:
         ymin = cls.extent.ymin + y * size
         return Extent(xmin, ymin, xmin + size, ymin + size)
 
-    @staticmethod
-    def parent(cell_id, parent_res: int):
-        c = np.asarray(cell_id, dtype=np.int64)
-        res = c >> 56
-        x = (c >> 28) & np.int64((1 << 28) - 1)
-        y = c & np.int64((1 << 28) - 1)
-        shift = (res - parent_res).astype(np.int64) if hasattr(res, "astype") else res - parent_res
-        return GlobalGrid.encode(parent_res, x >> shift, y >> shift)
-
-    @classmethod
-    def children(cls, cell_id: int) -> list[int]:
-        res, x, y = (int(v) for v in cls.decode(cell_id))
-        r = res + 1
-        return [
-            int(cls.encode(r, 2 * x + dx, 2 * y + dy))
-            for dy in (0, 1)
-            for dx in (0, 1)
-        ]
-
     @classmethod
     def k_ring(cls, cell_id: int, k: int = 1) -> list[int]:
         """All cells within Chebyshev distance k (incl. self) at same res —
@@ -375,61 +363,3 @@ class GlobalGrid:
                 out.append(int(cls.encode(res, (x + dx) % nx, yy)))  # wrap antimeridian
         return out
 
-    # -- covers ------------------------------------------------------------
-    @classmethod
-    def bbox_cells(cls, e: Extent, res: int) -> list[int]:
-        """All cells at ``res`` intersecting extent ``e`` (flat, non-compact)."""
-        size = cls.cell_size(res)
-        nx, ny = cls.n_cells(res)
-        x0 = max(0, int((e.xmin - cls.extent.xmin) // size))
-        x1 = min(nx - 1, int(math.ceil((e.xmax - cls.extent.xmin) / size)) - 1)
-        y0 = max(0, int((e.ymin - cls.extent.ymin) // size))
-        y1 = min(ny - 1, int(math.ceil((e.ymax - cls.extent.ymin) / size)) - 1)
-        return [
-            int(cls.encode(res, x, y))
-            for y in range(y0, y1 + 1)
-            for x in range(x0, x1 + 1)
-        ]
-
-    @classmethod
-    def compact_cover(cls, classify, min_res: int, max_res: int) -> list[int]:
-        """Compact cell cover of an arbitrary region (H3 ``compactCells``
-        analog). ``classify(extent) -> 2 | 1 | 0`` = CONTAINS | INTERSECTS |
-        DISJOINT of the region vs a cell extent. Fully-contained cells are
-        emitted at their (coarse) level; partial cells recurse to ``max_res``.
-        """
-        out: list[int] = []
-        stack = [int(c) for c in cls.bbox_cells(cls.extent, min_res)]
-        while stack:
-            cell = stack.pop()
-            res = int(np.int64(cell) >> 56)
-            ext = cls.cell_extent(cell)
-            cl = classify(ext)
-            if cl == 0:
-                continue
-            if cl == 2 or res >= max_res:
-                out.append(cell)
-            else:
-                stack.extend(cls.children(cell))
-        return out
-
-    @classmethod
-    def cover_to_res(cls, cells: list[int], res: int) -> list[int]:
-        """Expand a compact cover to uniform resolution ``res`` (uncompact)."""
-        out: list[int] = []
-        for cell in cells:
-            r = int(np.int64(cell) >> 56)
-            if r == res:
-                out.append(cell)
-            elif r > res:
-                out.append(int(cls.parent(cell, res)))
-            else:
-                stack = [cell]
-                while stack:
-                    c = stack.pop()
-                    cr = int(np.int64(c) >> 56)
-                    if cr == res:
-                        out.append(c)
-                    else:
-                        stack.extend(cls.children(c))
-        return sorted(set(out))

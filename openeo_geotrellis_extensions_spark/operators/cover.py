@@ -20,6 +20,10 @@ join, the catalog source and the sample sinks all use it:
     covered; any other tile is boundary. Other polygons keep
     :func:`core.geom.classify_rect`, which calls a tile that touches the
     feature's edge boundary;
+  - the spatial join's cells: ``GlobalGrid`` at resolution ``res`` is the
+    layout :meth:`core.grid.GlobalGrid.layout` of 1x1-pixel tiles, so a
+    feature's cells are the same blocks, expanded by the same
+    :func:`feature_block_keys` (``operators/spatial_join.py``);
   - :func:`feature_geometries` — the one ``collect()`` of
     ``{feature_index: geojson}``; features are broadcast-small on every
     path that uses it, so geometry text is closed over instead of joined
@@ -105,14 +109,13 @@ def cover_blocks(g: Geometry, layout: LayoutDefinition) -> list[tuple[int, int, 
     return out
 
 
-def feature_tile_keys(features: DataFrame, layout: LayoutDefinition) -> DataFrame:
-    """(feature_index, geojson) -> (feature_index, col, row, contained)
-    candidate layout tile keys, the clipToGrid analog
-    (FileLayerProvider.scala:1060-1093). Pure key metadata — no pixels
-    touched — so downstream joins prune cube partitions before any decode
-    (the reference's 'required keys before read' pushdown, SURVEY §4).
-    Python emits one row per :func:`cover_blocks` block; the JVM expands
-    the blocks to keys."""
+def feature_block_keys(
+    features: DataFrame, blocks_of: Callable[[Geometry], list[tuple[int, int, int, int, int]]]
+) -> DataFrame:
+    """(feature_index, geojson) -> (feature_index, col, row, contained) for
+    the ``(c0, c1, r0, r1, contained)`` key blocks ``blocks_of`` gives each
+    parsed feature. Python emits one row per block; the JVM expands the
+    blocks to keys."""
 
     def blocks(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -120,7 +123,7 @@ def feature_tile_keys(features: DataFrame, layout: LayoutDefinition) -> DataFram
             for fi, gj in zip(pdf["feature_index"], pdf["geojson"]):
                 g = parse_geometry(gj)
                 if g is not None:
-                    rows.extend((int(fi), *b) for b in cover_blocks(g, layout))
+                    rows.extend((int(fi), *b) for b in blocks_of(g))
             yield pd.DataFrame(rows, columns=["feature_index", "c0", "c1", "r0", "r1", "contained"])
 
     return (
@@ -132,6 +135,17 @@ def feature_tile_keys(features: DataFrame, layout: LayoutDefinition) -> DataFram
         .withColumn("row", F.explode(F.sequence("r0", "r1")))
         .select("feature_index", "col", "row", "contained")
     )
+
+
+def feature_tile_keys(features: DataFrame, layout: LayoutDefinition) -> DataFrame:
+    """(feature_index, geojson) -> (feature_index, col, row, contained)
+    candidate layout tile keys, the clipToGrid analog
+    (FileLayerProvider.scala:1060-1093). Pure key metadata — no pixels
+    touched — so downstream joins prune cube partitions before any decode
+    (the reference's 'required keys before read' pushdown, SURVEY §4).
+    The :func:`cover_blocks` blocks, expanded by
+    :func:`feature_block_keys`."""
+    return feature_block_keys(features, lambda g: cover_blocks(g, layout))
 
 
 def feature_tiles(tiles: DataFrame, features: DataFrame, layout: LayoutDefinition) -> DataFrame:

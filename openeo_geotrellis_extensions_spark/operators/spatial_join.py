@@ -3,9 +3,10 @@ reference's clipToGrid / VectorJoin / SpatialToSpacetimeJoinRdd machinery
 (FileLayerProvider.scala:386,921-922,1060-1093; SpatialToSpacetimeJoinRdd.scala:15-76).
 
 Pattern (BASELINE north_star):
-  1. features -> compact cell cover, flattened to a fixed join resolution
-     (distributed ``mapInPandas``; each cover cell carries a ``contained``
-     flag so fully-interior cells skip the point-in-polygon refine);
+  1. features -> cells at a fixed join resolution: the feature cover's
+     quadtree blocks (``operators/cover.py``, one ``mapInPandas``),
+     expanded in the JVM; each cell carries a ``contained`` flag so
+     fully-interior cells skip the point-in-polygon refine;
   2. points -> cell id at the same resolution (vectorized arithmetic);
   3. equi-join on ``cell`` — Catalyst picks broadcast-hash when the cover
      side is small, AQE splits skewed hot cells otherwise;
@@ -24,24 +25,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..core.geom import (
-    classify_rect,
+    Geometry,
     clipped_area,
     fills_bbox,
     parse_geometry,
     points_in_geometry,
 )
 from ..core.grid import GlobalGrid
-from .cover import feature_geometries
+from .cover import cover_blocks, feature_block_keys, feature_geometries
 
 
 def cell_for_point_col(res: int, x: Column, y: Column) -> Column:
@@ -141,97 +135,38 @@ def zindex3_col(col: Column, row: Column, time_index: Column) -> Column:
     )
 
 
-_COVER_SCHEMA = StructType(
-    [
-        StructField("feature_index", IntegerType()),
-        StructField("cell", LongType()),
-        StructField("contained", BooleanType()),
-    ]
-)
+def cell_blocks(g: Geometry, res: int) -> list[tuple[int, int, int, int, int]]:
+    """``(c0, c1, r0, r1, contained)`` blocks of the ``GlobalGrid.layout(res)``
+    keys that cover ``g``: :func:`operators.cover.cover_blocks` for
+    polygons. A point takes its cell from ``GlobalGrid.cell_for_point``, the
+    rule of the points side of the join (clamped into the border cells; a
+    point on a horizontal cell edge lies in the cell north of it)."""
+    if g.kind in ("Point", "MultiPoint"):
+        cells = GlobalGrid.cell_for_point(res, g.points[:, 0], g.points[:, 1])
+        _, xs, ys = GlobalGrid.decode(cells)
+        rows = GlobalGrid.n_cells(res)[1] - 1 - ys
+        return [(c, c, r, r, 0) for c, r in dict.fromkeys(zip(xs.tolist(), rows.tolist()))]
+    return cover_blocks(g, GlobalGrid.layout(res))
 
 
-def _cover_from(g, start_cell: int, res: int) -> list[tuple[int, bool]]:
-    """Compact cover of geometry ``g`` restricted to ``start_cell``'s region,
-    flattened to (cell_at_res, contained) pairs."""
-    out: list[tuple[int, bool]] = []
-    stack = [int(start_cell)]
-    while stack:
-        cell = stack.pop()
-        r = int(np.int64(cell) >> 56)
-        cl = classify_rect(g, GlobalGrid.cell_extent(cell))
-        if cl == 0:
-            continue
-        if cl == 2 or r >= res:
-            full = cl == 2
-            for c in GlobalGrid.cover_to_res([cell], res):
-                out.append((int(c), full))
-        else:
-            stack.extend(GlobalGrid.children(cell))
-    return out
-
-
-def cover_cells_for_features(
-    features: DataFrame, res: int, split_res: int = 2
-) -> DataFrame:
+def cover_cells_for_features(features: DataFrame, res: int) -> DataFrame:
     """(feature_index, geojson) -> (feature_index, cell, contained) at
-    resolution ``res`` via compact cover + uncompact. ``contained`` cells are
-    fully inside the feature (refine can be skipped — the H3 polyfill
-    'full cells' optimization).
-
-    Two pipelined stages: stage 1 explodes each feature into the coarse
-    (``split_res``) cells its bbox touches; stage 2 computes the compact
-    cover independently per coarse cell. Shuffle-free: the split rows stay
-    with their feature's partition, so parallelism follows the features
-    DataFrame's own partitioning."""
-    split_res = min(split_res, res)
-
-    def split(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            fis, gjs, cells = [], [], []
-            for fi, gj in zip(pdf["feature_index"], pdf["geojson"]):
-                g = parse_geometry(gj)
-                if g is None:
-                    continue
-                if g.kind in ("Point", "MultiPoint"):
-                    # handled wholly in stage 2 under a single split cell
-                    fis.append(int(fi)); gjs.append(gj); cells.append(-1)
-                    continue
-                for c in GlobalGrid.bbox_cells(g.bbox(), split_res):
-                    fis.append(int(fi)); gjs.append(gj); cells.append(int(c))
-            yield pd.DataFrame(
-                {"feature_index": fis, "geojson": gjs, "split_cell": cells}
-            )
-
-    exploded = features.mapInPandas(
-        split, schema="feature_index int, geojson string, split_cell long"
+    resolution ``res``: the :func:`cell_blocks` of each feature, expanded in
+    the JVM. ``contained`` cells are fully inside the feature (refine can be
+    skipped — the H3 polyfill 'full cells' optimization). A border cell is
+    never contained: ``cell_for_point`` clamps points outside the world
+    into it, so its extent does not bound its points."""
+    nx, ny = GlobalGrid.n_cells(res)
+    col, row = F.col("col").cast("long"), F.col("row").cast("long")
+    inner = (col > 0) & (col < nx - 1) & (row > 0) & (row < ny - 1)
+    return feature_block_keys(features, lambda g: cell_blocks(g, res)).select(
+        "feature_index",
+        F.shiftleft(F.lit(res).cast("long"), 56)
+        .bitwiseOR(F.shiftleft(col, 28))
+        .bitwiseOR(F.lit(ny - 1) - row)
+        .alias("cell"),
+        ((F.col("contained") == 1) & inner).alias("contained"),
     )
-
-    def cover(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        geom_cache: dict[int, object] = {}
-        for pdf in it:
-            out_f, out_c, out_k = [], [], []
-            for fi, gj, sc in zip(
-                pdf["feature_index"], pdf["geojson"], pdf["split_cell"]
-            ):
-                g = geom_cache.get(int(fi))
-                if g is None:
-                    g = parse_geometry(gj)
-                    geom_cache[int(fi)] = g
-                if g.kind in ("Point", "MultiPoint"):
-                    for c in set(
-                        int(c) for c in GlobalGrid.cell_for_point(
-                            res, g.points[:, 0], g.points[:, 1]
-                        )
-                    ):
-                        out_f.append(int(fi)); out_c.append(c); out_k.append(False)
-                    continue
-                for c, full in _cover_from(g, int(sc), res):
-                    out_f.append(int(fi)); out_c.append(c); out_k.append(full)
-            yield pd.DataFrame(
-                {"feature_index": out_f, "cell": out_c, "contained": out_k}
-            )
-
-    return exploded.mapInPandas(cover, schema=_COVER_SCHEMA)
 
 
 def spatial_join_points(
@@ -343,7 +278,7 @@ def polygon_overlap_join(
 
     Scale shape mirrors spatial_join_points: candidates come from an
     EQUI-join of the geometry's bbox cover cells (bbox_cells_col, pure
-    Columns) against the features' compact cover, deduped per
+    Columns) against the features' cell cover, deduped per
     (pair_cols, feature_index) — never a geometry theta join. The exact
     area then runs per candidate pair in Arrow batches: the geometry
     (arbitrary rings, holes, multipolygons) is Sutherland-Hodgman-clipped

@@ -78,14 +78,6 @@ def test_global_grid_encode_decode_roundtrip():
         assert (r, xx, yy) == (res, x, y)
 
 
-def test_global_grid_parent_child():
-    cid = int(GlobalGrid.encode(5, 20, 11))
-    kids = GlobalGrid.children(cid)
-    assert len(kids) == 4
-    for k in kids:
-        assert int(GlobalGrid.parent(k, 5)) == cid
-
-
 def test_cell_for_point_and_extent_agree():
     rng = np.random.default_rng(7)
     xs = rng.uniform(-179, 179, 50)
@@ -104,28 +96,14 @@ def test_k_ring():
     assert cid in ring
 
 
-def test_bbox_cells_and_cover_to_res():
-    e = Extent(0, 0, 44.9, 44.9)
-    cells = GlobalGrid.bbox_cells(e, 2)
-    assert len(cells) == 1
-    flat = GlobalGrid.cover_to_res(cells, 4)
-    assert len(flat) == 16
-
-
-def test_compact_cover_of_rect():
-    # region = exactly one res-2 cell -> cover collapses to that single cell
-    target = int(GlobalGrid.encode(2, 4, 2))
-    te = GlobalGrid.cell_extent(target)
-
-    def classify(ext: Extent) -> int:
-        if te.contains(ext):
-            return 2
-        if te.intersects(ext):
-            return 1
-        return 0
-
-    cover = GlobalGrid.compact_cover(classify, 0, 6)
-    assert cover == [target]
+def test_global_grid_layout_keys_are_cells():
+    """Key (x, ny - 1 - y) of GlobalGrid.layout(res) has cell (x, y)'s extent."""
+    for res in (0, 4, 9):
+        layout = GlobalGrid.layout(res)
+        ny = GlobalGrid.n_cells(res)[1]
+        for x, y in [(0, 0), (1, ny - 1), (2 * ny - 1, ny // 2)]:
+            cell = int(GlobalGrid.encode(res, x, y))
+            assert layout.extent_for_key(x, ny - 1 - y) == GlobalGrid.cell_extent(cell)
 
 
 def test_world_extent():

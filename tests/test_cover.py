@@ -1,16 +1,18 @@
-"""The feature cover (operators/cover.py): which tiles a feature covers, as
-quadtree blocks of keys, and one pixel rule for every polygon operator. A
-point marks the one pixel that contains it, in zonal stats, rasterize,
-mask_polygon and chunk_polygon alike."""
+"""The feature cover (operators/cover.py): which tiles (and spatial join
+cells) a feature covers, as quadtree blocks of keys, and one pixel rule for
+every polygon operator. A point marks the one pixel that contains it, in
+zonal stats, rasterize, mask_polygon and chunk_polygon alike."""
 
+import hashlib
 import json
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry
 from openeo_geotrellis_extensions_spark.core.geom import from_geojson, rectangle_extent
-from openeo_geotrellis_extensions_spark.core.grid import Extent, LayoutDefinition
+from openeo_geotrellis_extensions_spark.core.grid import Extent, GlobalGrid, LayoutDefinition
 from openeo_geotrellis_extensions_spark.core.tiles import decode_tiles
 from openeo_geotrellis_extensions_spark.operators.cloud import chunk_polygon
 from openeo_geotrellis_extensions_spark.operators.cover import (
@@ -20,6 +22,7 @@ from openeo_geotrellis_extensions_spark.operators.cover import (
 )
 from openeo_geotrellis_extensions_spark.operators.mask import mask_polygon
 from openeo_geotrellis_extensions_spark.operators.rasterize import rasterize_features
+from openeo_geotrellis_extensions_spark.operators.spatial_join import cell_blocks
 from openeo_geotrellis_extensions_spark.operators.zonal import aggregate_spatial
 from openeo_geotrellis_extensions_spark.sources.datacube import constant_cube
 from openeo_geotrellis_extensions_spark.sources.interleaved import media_layout
@@ -120,6 +123,76 @@ def test_world_zone_is_a_few_blocks(spark):
 def test_non_rectangle_cover_keeps_classify_rect(name):
     gj, want = NON_RECTANGLES[name]
     assert _keys(cover_blocks(from_geojson(gj), LAYOUT8)) == sorted(want)
+
+
+# Spatial join cells: features on the world grid, off the cell edges unless
+# named "aligned"; the multipoint has points on a horizontal cell edge and
+# outside the world, which cell_for_point clamps into border cells.
+JOIN_FEATURES = {
+    "lshape": _poly([(-40.3, -20.7), (25.1, -20.7), (25.1, 5.3), (-10.9, 5.3), (-10.9, 35.6), (-40.3, 35.6), (-40.3, -20.7)]),
+    "lshape_aligned": _poly([(-45, -22.5), (22.5, -22.5), (22.5, 0), (-11.25, 0), (-11.25, 33.75), (-45, 33.75), (-45, -22.5)]),
+    "hole": _poly(
+        [(60.2, -50.4), (120.7, -50.4), (120.7, 10.1), (60.2, 10.1), (60.2, -50.4)],
+        [(80.3, -30.6), (100.9, -30.6), (100.9, -10.2), (80.3, -10.2), (80.3, -30.6)],
+    ),
+    "triangle": _poly([(-150.3, -60.2), (-90.7, -60.2), (-120.1, 20.9), (-150.3, -60.2)]),
+    "multipolygon": json.dumps({"type": "MultiPolygon", "coordinates": [
+        [[[130.2, 20.3], [170.6, 25.1], [165.3, 60.7], [140.1, 55.2], [130.2, 20.3]]],
+        [[[-170.2, 60.3], [-160.1, 60.3], [-160.1, 70.4], [-170.2, 70.4], [-170.2, 60.3]]],
+    ]}),
+    "multipoint": json.dumps({"type": "MultiPoint", "coordinates": [
+        [195.0, 0.0], [180.0, 0.0], [0.0, 90.0], [10.3, 45.0], [-180.0, -90.0], [10.31, 45.0],
+    ]}),
+    **{f"rect{fi}": entry._rect_geojson(*bounds) for fi, *bounds in entry.RECT_FEATURES},
+}
+
+# (cells, contained cells, digest) of each feature's sorted (cell, contained)
+# list, as the spatial join's GlobalGrid quadtree (a compact cover of
+# classify_rect, flattened to res) gave them before the cover moved to
+# cover_blocks.
+JOIN_COVERS = {
+    ("lshape", 4): (33, 11, "833f3f9cc9e4ac42"),
+    ("lshape", 6): (372, 286, "d661b6ae3c12bf61"),
+    ("lshape", 7): (1377, 1205, "57ac34a0042071e8"),
+    ("lshape_aligned", 4): (26, 3, "04ff2a0baa7d858c"),
+    ("lshape_aligned", 6): (359, 252, "ae8c8bf2077f025e"),
+    ("lshape_aligned", 7): (1391, 1172, "9b5b01df206c5475"),
+    ("hole", 4): (36, 10, "7d6a1f821fc879a4"),
+    ("hole", 6): (448, 336, "fb39ebf3d80fa062"),
+    ("hole", 7): (1767, 1539, "9e01ecf2e2f36b25"),
+    ("triangle", 4): (32, 9, "b2b28c65f4d80eb5"),
+    ("triangle", 6): (357, 258, "628e16daa732c680"),
+    ("triangle", 7): (1308, 1111, "ae55206f602cb305"),
+    ("multipolygon", 4): (23, 3, "47c22405c3f6d3da"),
+    ("multipolygon", 6): (199, 127, "37d2224a90db871a"),
+    ("multipolygon", 7): (718, 570, "a83bc6db0dcd3e78"),
+    ("multipoint", 4): (4, 0, "31d3bd7876731bdd"),
+    ("multipoint", 6): (4, 0, "910977b03d264f4b"),
+    ("multipoint", 7): (4, 0, "31ba43c003a2976c"),
+    ("rect0", 4): (1, 0, "070731b51076bbd3"),
+    ("rect0", 6): (2, 0, "aed72d32daa890b8"),
+    ("rect0", 7): (4, 0, "87765e6ea018581e"),
+    ("rect1", 4): (56, 30, "a1d32eef9beed62e"),
+    ("rect1", 6): (754, 648, "799725e8a8f3a1e8"),
+    ("rect1", 7): (2958, 2744, "14404948e28bd77c"),
+    ("rect2", 4): (24, 8, "ac29de1ec2252676"),
+    ("rect2", 6): (252, 190, "e1d67c82973b2ba4"),
+    ("rect2", 7): (902, 780, "c81986dd39aca8fa"),
+    ("rect3", 4): (1, 0, "9cd34731ce607633"),
+    ("rect3", 6): (1, 0, "f84d41e1d002cac5"),
+    ("rect3", 7): (2, 0, "bc044faf2eca1c44"),
+}
+
+
+@pytest.mark.parametrize("name, res", sorted(JOIN_COVERS))
+def test_join_cell_cover_is_unchanged(name, res):
+    ny = GlobalGrid.n_cells(res)[1]
+    cover = sorted(
+        (int(GlobalGrid.encode(res, c, ny - 1 - r)), bool(k))
+        for c, r, k in _keys(cell_blocks(from_geojson(JOIN_FEATURES[name]), res))
+    )
+    digest = hashlib.sha256(repr(cover).encode()).hexdigest()[:16]
+    assert (len(cover), sum(k for _, k in cover), digest) == JOIN_COVERS[(name, res)]
 
 
 # x = 1.05 is pixel 0 of tile column 1; y = 1.05 is pixel row 15 of tile row 2

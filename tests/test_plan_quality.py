@@ -84,6 +84,8 @@ def test_spatial_join_broadcasts_cover(spark):
     plan = plan_of(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan  # small feature side never sort-merges
+    # one Python stage each: geometry parse, feature cover blocks, PIP refine
+    assert plan.count("MapInPandas") == 3
 
 
 def test_embedding_queries_have_no_cartesian(spark):

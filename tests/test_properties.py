@@ -47,12 +47,6 @@ def test_cell_contains_its_point(x, y, res):
     eps = GlobalGrid.cell_size(res) * 1e-12
     assert e.xmin - eps <= x <= e.xmax + eps
     assert e.ymin - eps <= y <= e.ymax + eps
-    # parent at res-1 contains the same cell area
-    if res > 0:
-        pid = int(GlobalGrid.parent(cid, res - 1))
-        pe = GlobalGrid.cell_extent(pid)
-        assert pe.contains(e)
-        assert cid in GlobalGrid.children(pid)
 
 
 @given(

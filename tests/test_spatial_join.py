@@ -78,6 +78,41 @@ def test_cover_cells_contain_all_feature_area(spark, features_df):
                 assert corners.all()
 
 
+def _rect(x0, y0, x1, y1):
+    return json.dumps({"type": "Polygon", "coordinates": [[[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]]})
+
+
+def test_cell_aligned_rectangle_cells_are_contained(spark):
+    """Cells wholly inside a rectangle are contained, also where their edges
+    lie on its edges: 64 x 64 cells at res 9, none left to the PIP refine."""
+    size = GlobalGrid.cell_size(9)
+    feats = spark.createDataFrame([(0, _rect(0.0, 0.0, 64 * size, 64 * size))], ["feature_index", "geojson"])
+    cover = cover_cells_for_features(feats, res=9)
+    assert cover.count() == 4096
+    assert cover.where(~F.col("contained")).count() == 0
+
+
+def test_border_cells_refine_clamped_points(spark):
+    """cell_for_point clamps points outside the world into the border cells,
+    so a border cell is never contained: its points still get the PIP test."""
+    feats = spark.createDataFrame(
+        [(0, _rect(170.0, -10.0, 190.0, 10.0)), (1, _rect(-180.0, -90.0, 180.0, 90.0))],
+        ["feature_index", "geojson"],
+    )
+    xy = [(195.0, 0.0), (180.0, 0.0), (0.0, 90.0), (179.5, 0.5), (175.0, -5.0), (0.0, 0.0), (-180.0, -90.0)]
+    points = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)], ["pid", "rep_x", "rep_y"]
+    )
+    got = {(r.pid, r.feature_index) for r in spatial_join_points(points, feats, res=7).collect()}
+    exp = {
+        (i, fi)
+        for fi, gj in feats.collect()
+        for i, (x, y) in enumerate(xy)
+        if points_in_geometry(parse_geometry(gj), np.array([x]), np.array([y]))[0]
+    }
+    assert (0, 0) not in exp and got == exp
+
+
 @pytest.mark.parametrize("res", [4, 7])
 def test_join_matches_bruteforce_oracle(spark, features_df, points, res):
     got = (
