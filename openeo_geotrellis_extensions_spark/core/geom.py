@@ -1,7 +1,7 @@
 """Pure-numpy planar geometry — the engine's replacement for JTS/Shapely.
 
 No geo libraries exist in this environment, so GeoJSON/WKT parsing,
-vectorized point-in-polygon, rectangle classification (for the feature
+vectorized point-in-polygon, block classification (for the feature
 cover's quadtree), rasterization by pixel-center test, and point->polygon
 distance are implemented here directly. All hot paths are vectorized numpy,
 designed to be called from Arrow pandas UDFs on batches.
@@ -192,8 +192,13 @@ def points_in_geometry(geom: Geometry, xs: np.ndarray, ys: np.ndarray) -> np.nda
 
 
 # ---------------------------------------------------------------------------
-# Rectangle vs geometry classification (drives the feature cover's quadtree)
+# Block classification (drives the feature cover's quadtree)
 # ---------------------------------------------------------------------------
+
+#: Cap on blocks x edges per vectorized step of :func:`classify_blocks`, so a
+#: 10,000-vertex polygon classifies 100 blocks at a time (8 MB temporaries)
+#: however many blocks a quadtree level holds.
+MAX_CLASSIFY_VALUES = 1_000_000
 
 
 def _segments(geom: Geometry) -> tuple[np.ndarray, np.ndarray]:
@@ -209,59 +214,47 @@ def _segments(geom: Geometry) -> tuple[np.ndarray, np.ndarray]:
     return np.concatenate(p0s), np.concatenate(p1s)
 
 
-def _segments_intersect_rect(p0: np.ndarray, p1: np.ndarray, e: Extent) -> bool:
-    """Any segment crosses the open rectangle? Liang-Barsky, vectorized."""
-    dx = p1[:, 0] - p0[:, 0]
-    dy = p1[:, 1] - p0[:, 1]
-    t0 = np.zeros(len(p0))
-    t1 = np.ones(len(p0))
-    ok = np.ones(len(p0), dtype=bool)
-    for p, q in (
-        (-dx, p0[:, 0] - e.xmin),
-        (dx, e.xmax - p0[:, 0]),
-        (-dy, p0[:, 1] - e.ymin),
-        (dy, e.ymax - p0[:, 1]),
-    ):
-        with np.errstate(divide="ignore", invalid="ignore"):
-            r = np.where(p != 0, q / np.where(p == 0, 1, p), 0.0)
-        par = p == 0
-        ok &= ~(par & (q < 0))
-        ent = (p < 0)
-        t0 = np.where(~par & ent, np.maximum(t0, r), t0)
-        t1 = np.where(~par & ~ent & (p > 0), np.minimum(t1, r), t1)
-    return bool(np.any(ok & (t0 <= t1)))
+def classify_blocks(geom: Geometry, x0, y0, x1, y1) -> np.ndarray:
+    """(B,) class of each block ``[x0, x1] x [y0, y1]`` against a polygonal
+    ``geom``, by one open/closed rule:
 
+      - INTERSECTS(1) when some edge meets the OPEN block (a strict
+        Liang-Barsky clip: an edge that only touches the block's sides or
+        corners does not count);
+      - otherwise the open block lies wholly inside or wholly outside the
+        polygon, and its centre decides: CONTAINS(2) when the centre is in
+        the polygon (the closed block lies in the closed polygon), else
+        DISJOINT(0) (the open block misses the polygon's interior).
 
-def classify_rect(geom: Geometry, e: Extent) -> int:
-    """CONTAINS(2) if the geometry fully covers rect ``e``; INTERSECTS(1) if
-    partial overlap; DISJOINT(0) otherwise. Used by operators.cover.cover_blocks
-    for every geometry that is not an axis-aligned rectangle."""
-    if geom.kind in ("Point", "MultiPoint"):
-        p = geom.points
-        inside = (
-            (p[:, 0] >= e.xmin) & (p[:, 0] <= e.xmax)
-            & (p[:, 1] >= e.ymin) & (p[:, 1] <= e.ymax)
-        )
-        return INTERSECTS if inside.any() else DISJOINT
-    bb = geom.bbox()
-    if not bb.intersects(e) and not bb.contains(e):
-        return DISJOINT
-    cx = np.asarray([e.xmin, e.xmax, e.xmax, e.xmin])
-    cy = np.asarray([e.ymin, e.ymin, e.ymax, e.ymax])
-    corners_in = points_in_geometry(geom, cx, cy)
+    Blocks are taken ``MAX_CLASSIFY_VALUES // E`` at a time."""
+    x0, y0, x1, y1 = (np.asarray(v, dtype=np.float64).ravel() for v in (x0, y0, x1, y1))
     p0, p1 = _segments(geom)
-    edge_hit = _segments_intersect_rect(p0, p1, e)
-    if corners_in.all() and not edge_hit:
-        return CONTAINS
-    if corners_in.any() or edge_hit:
-        return INTERSECTS
-    # rect may fully contain the geometry
-    v = np.concatenate([r for poly in geom.polygons for r in poly])
-    vin = (
-        (v[:, 0] >= e.xmin) & (v[:, 0] <= e.xmax)
-        & (v[:, 1] >= e.ymin) & (v[:, 1] <= e.ymax)
-    )
-    return INTERSECTS if vin.any() else DISJOINT
+    d = p1 - p0
+    out = np.empty(len(x0), dtype=np.int8)
+    step = max(1, MAX_CLASSIFY_VALUES // len(p0))
+    for lo in range(0, len(x0), step):
+        s = slice(lo, lo + step)
+        t0, t1 = 0.0, 1.0
+        ok = True
+        for p, q in (
+            (-d[:, 0], p0[:, 0] - x0[s, None]),
+            (d[:, 0], x1[s, None] - p0[:, 0]),
+            (-d[:, 1], p0[:, 1] - y0[s, None]),
+            (d[:, 1], y1[s, None] - p0[:, 1]),
+        ):
+            # r is read only where p != 0; a near-parallel edge may overflow
+            # it to +-inf, which still bounds t correctly
+            with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+                r = q / p
+            t0 = np.where(p < 0, np.maximum(t0, r), t0)
+            t1 = np.where(p > 0, np.minimum(t1, r), t1)
+            ok = ok & ((p != 0) | (q > 0))
+        cls = np.where((ok & (t0 < t1)).any(axis=1), INTERSECTS, DISJOINT)
+        free = cls == DISJOINT
+        cx, cy = (x0[s] + x1[s]) / 2, (y0[s] + y1[s]) / 2
+        cls[free] = np.where(points_in_geometry(geom, cx[free], cy[free]), CONTAINS, DISJOINT)
+        out[s] = cls
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -434,26 +427,6 @@ def fills_bbox(geom: Geometry) -> bool:
     return abs(clipped_area(geom, bb) - area) <= 1e-9 * max(1.0, area)
 
 
-def rectangle_extent(geom: Geometry) -> Extent | None:
-    """The bbox when ``geom`` is exactly an axis-aligned rectangle, else None.
-
-    Exact, with no area tolerance (unlike :func:`fills_bbox`): one Polygon
-    with one ring of four distinct vertices, all at bbox corners, joined by
-    axis-aligned edges. A bow-tie through the same corners has diagonal
-    edges and is not a rectangle."""
-    if geom.kind != "Polygon" or len(geom.polygons[0]) != 1:
-        return None
-    ring = geom.polygons[0][0]
-    if len(ring) == 5 and (ring[0] == ring[-1]).all():
-        ring = ring[:-1]
-    bb = geom.bbox()
-    corners = {(bb.xmin, bb.ymin), (bb.xmax, bb.ymin), (bb.xmax, bb.ymax), (bb.xmin, bb.ymax)}
-    if len(ring) != 4 or len(corners) != 4 or set(map(tuple, ring.tolist())) != corners:
-        return None
-    d = np.roll(ring, -1, axis=0) - ring
-    return bb if ((d[:, 0] == 0) != (d[:, 1] == 0)).all() else None
-
-
 def reproject_geometry(
     geom: Geometry, src_crs: str, dst_crs: str, densify: int = 0
 ) -> Geometry:
@@ -491,13 +464,3 @@ def reproject_geometry(
         polys.append(rings)
     return Geometry(geom.kind, polygons=polys)
 
-
-def geometry_to_geojson(geom: Geometry) -> str:
-    if geom.kind == "Point":
-        return json.dumps({"type": "Point", "coordinates": list(geom.points[0])})
-    if geom.kind == "MultiPoint":
-        return json.dumps({"type": "MultiPoint", "coordinates": geom.points.tolist()})
-    coords = [[r.tolist() for r in poly] for poly in geom.polygons]
-    if geom.kind == "Polygon":
-        return json.dumps({"type": "Polygon", "coordinates": coords[0]})
-    return json.dumps({"type": "MultiPolygon", "coordinates": coords})

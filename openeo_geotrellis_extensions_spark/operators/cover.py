@@ -12,14 +12,12 @@ join, the catalog source and the sample sinks all use it:
     contained)`` rows, ``contained = 1`` when the tile lies wholly inside
     the feature (:func:`feature_tiles` adds each feature's key bounds).
     Python emits quadtree blocks of keys (:func:`cover_blocks`) and the
-    JVM expands them. An axis-aligned rectangle is classified exactly, in
-    O(1) per block, with CLOSED containment: a tile inside the closed
-    rectangle is contained even when its edges lie on the rectangle's
-    (its pixel centres lie strictly inside, and every pixel has area
-    weight 1); a tile whose open intersection with it is empty is not
-    covered; any other tile is boundary. Other polygons keep
-    :func:`core.geom.classify_rect`, which calls a tile that touches the
-    feature's edge boundary;
+    JVM expands them. Every polygon is classified by one open/closed rule
+    (:func:`core.geom.classify_blocks`): a tile that no polygon edge
+    crosses is contained when it lies in the CLOSED polygon (its edges
+    may lie on the polygon's: its pixel centres lie strictly inside, and
+    every pixel has area weight 1) and not covered when its OPEN interior
+    misses the polygon; a tile that an edge crosses is boundary;
   - the spatial join's cells: ``GlobalGrid`` at resolution ``res`` is the
     layout :meth:`core.grid.GlobalGrid.layout` of 1x1-pixel tiles, so a
     feature's cells are the same blocks, expanded by the same
@@ -47,25 +45,24 @@ from pyspark.sql import functions as F
 
 from ..core.geom import (
     CONTAINS,
-    DISJOINT,
     INTERSECTS,
     Geometry,
-    classify_rect,
+    classify_blocks,
     parse_geometry,
     rasterize,
-    rectangle_extent,
 )
-from ..core.grid import Extent, LayoutDefinition
+from ..core.grid import LayoutDefinition
 
 
 def cover_blocks(g: Geometry, layout: LayoutDefinition) -> list[tuple[int, int, int, int, int]]:
     """``(c0, c1, r0, r1, contained)`` inclusive key blocks that together
     cover geometry ``g`` on ``layout`` — a quadtree over the key range of
-    the bbox, one classify per block, so a feature covering K tiles costs
-    O(perimeter + log K) classifies and emits O(perimeter) blocks, not K
-    keys. A rectangle is classified in O(1) with closed containment; any
-    other polygon by :func:`core.geom.classify_rect`. Each key of a point
-    is a 1x1 boundary block."""
+    the bbox, classified one level at a time by
+    :func:`core.geom.classify_blocks`, so a feature covering K tiles costs
+    O(perimeter + log K) block classifies and emits O(perimeter) blocks,
+    not K keys. Contained blocks and single boundary keys are emitted;
+    dropped blocks end; other boundary blocks split in four. Each key of a
+    point is a 1x1 boundary block."""
     if g.kind in ("Point", "MultiPoint"):
         keys = dict.fromkeys(layout.key_for_point(x, y) for x, y in g.points)
         return [
@@ -73,40 +70,40 @@ def cover_blocks(g: Geometry, layout: LayoutDefinition) -> list[tuple[int, int, 
             for c, r in keys
             if 0 <= c < layout.layout_cols and 0 <= r < layout.layout_rows
         ]
-    rect = rectangle_extent(g)
-
-    def classify(e: Extent) -> int:
-        if rect is None:
-            return classify_rect(g, e)
-        return CONTAINS if rect.contains(e) else INTERSECTS if rect.intersects(e) else DISJOINT
-
-    out: list[tuple[int, int, int, int, int]] = []
-
-    def block_keys(c0: int, c1: int, r0: int, r1: int) -> None:
-        w0 = layout.extent_for_key(c0, r0)
-        w1 = layout.extent_for_key(c1, r1)
-        cls = classify(Extent(w0.xmin, w1.ymin, w1.xmax, w0.ymax))
-        if cls == DISJOINT:
-            return
-        if cls == CONTAINS or (c0 == c1 and r0 == r1):
-            out.append((c0, c1, r0, r1, int(cls == CONTAINS)))
-            return
-        cm = (c0 + c1) // 2
-        rm = (r0 + r1) // 2
-        for cc0, cc1 in ((c0, cm), (cm + 1, c1)) if c1 > c0 else ((c0, c1),):
-            for rr0, rr1 in ((r0, rm), (rm + 1, r1)) if r1 > r0 else ((r0, r1),):
-                block_keys(cc0, cc1, rr0, rr1)
-
     c0, r0, c1, r1 = layout.key_bounds_for_extent(g.bbox())
-    if rect is not None:
-        # one key of margin: the bounds' float division can round away a
-        # sliver that the exact rectangle test keeps
-        c0, r0 = max(c0 - 1, 0), max(r0 - 1, 0)
-        c1 = min(c1 + 1, layout.layout_cols - 1)
-        r1 = min(r1 + 1, layout.layout_rows - 1)
-    if c0 <= c1 and r0 <= r1:
-        block_keys(c0, c1, r0, r1)
+    # one key of margin: the bounds' float division can round away a
+    # sliver that the exact rule keeps
+    c0, r0 = max(c0 - 1, 0), max(r0 - 1, 0)
+    c1 = min(c1 + 1, layout.layout_cols - 1)
+    r1 = min(r1 + 1, layout.layout_rows - 1)
+    live = np.array([(c0, c1, r0, r1)] if c0 <= c1 and r0 <= r1 else [], dtype=np.int64)
+    e, tw, th = layout.extent, layout.tile_width, layout.tile_height
+    out = []
+    while len(live):
+        c0, c1, r0, r1 = live.T
+        # the same float arithmetic as layout.extent_for_key of the corners
+        cls = classify_blocks(
+            g, e.xmin + c0 * tw, (e.ymax - r1 * th) - th, (e.xmin + c1 * tw) + tw, e.ymax - r0 * th
+        )
+        leaf = (cls == CONTAINS) | ((cls == INTERSECTS) & (c0 == c1) & (r0 == r1))
+        out += [(*b, int(k == CONTAINS)) for b, k in zip(live[leaf].tolist(), cls[leaf])]
+        live = _quarters(live[(cls == INTERSECTS) & ~leaf])
     return out
+
+
+def _quarters(blocks: np.ndarray) -> np.ndarray:
+    """The (up to four) non-empty halves-by-halves of each ``(c0, c1, r0,
+    r1)`` block; a one-key-wide side is not split."""
+    c0, c1, r0, r1 = blocks.T
+    cm, rm = (c0 + c1) // 2, (r0 + r1) // 2
+    q = np.concatenate([
+        np.column_stack(b)
+        for b in (
+            (c0, cm, r0, rm), (c0, cm, rm + 1, r1),
+            (cm + 1, c1, r0, rm), (cm + 1, c1, rm + 1, r1),
+        )
+    ])
+    return q[(q[:, 0] <= q[:, 1]) & (q[:, 2] <= q[:, 3])]
 
 
 def feature_block_keys(

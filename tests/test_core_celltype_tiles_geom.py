@@ -16,7 +16,7 @@ from openeo_geotrellis_extensions_spark.core.geom import (
     CONTAINS,
     DISJOINT,
     INTERSECTS,
-    classify_rect,
+    classify_blocks,
     distance_to_geometry,
     from_geojson,
     from_wkt,
@@ -205,17 +205,38 @@ def test_parse_geometry_dispatch():
     assert parse_geometry('{"not": "geojson"}') is None
 
 
-def test_classify_rect():
-    g = from_geojson(SQUARE)
-    assert classify_rect(g, Extent(2, 2, 3, 3)) == CONTAINS
-    assert classify_rect(g, Extent(-5, -5, 1, 1)) == INTERSECTS
-    assert classify_rect(g, Extent(11, 11, 12, 12)) == DISJOINT
-    # rect fully containing the polygon
-    assert classify_rect(g, Extent(-5, -5, 15, 15)) == INTERSECTS
-    # hole interior is NOT contained
-    d = from_geojson(DONUT)
-    assert classify_rect(d, Extent(4.5, 4.5, 5.5, 5.5)) == DISJOINT
-    assert classify_rect(d, Extent(3.5, 3.5, 5.5, 5.5)) == INTERSECTS
+def _classify_one(g, x0, y0, x1, y1):
+    return int(classify_blocks(g, [x0], [y0], [x1], [y1])[0])
+
+
+SQUARE_BLOCKS = {
+    (2, 2, 3, 3): CONTAINS,
+    (-5, -5, 1, 1): INTERSECTS,
+    (11, 11, 12, 12): DISJOINT,
+    (-5, -5, 15, 15): INTERSECTS,  # the block contains the whole polygon
+    (10, 10, 11, 11): DISJOINT,  # touches the polygon only at a corner
+    (-1, -1, 0, 0): DISJOINT,
+    (0, 2, 1, 3): CONTAINS,  # lies along an edge, inside
+    (9, 0, 10, 10): CONTAINS,
+    (10, 2, 11, 3): DISJOINT,  # lies along an edge, outside
+}
+DONUT_BLOCKS = {
+    (4.5, 4.5, 5.5, 5.5): DISJOINT,  # hole interior
+    (4, 4, 6, 6): DISJOINT,  # the hole itself
+    (3.5, 3.5, 5.5, 5.5): INTERSECTS,
+    (3, 4, 4, 5): CONTAINS,  # along the hole's edge, outside the hole
+    (6, 6, 7, 7): CONTAINS,  # touches the hole only at a corner
+}
+
+
+def test_classify_blocks():
+    for gj, blocks in ((SQUARE, SQUARE_BLOCKS), (DONUT, DONUT_BLOCKS)):
+        g = from_geojson(gj)
+        for e, want in blocks.items():
+            assert _classify_one(g, *e) == want, e
+        # several blocks in one call: the answers of one call per block
+        got = classify_blocks(g, *np.asarray(list(blocks), dtype=np.float64).T)
+        assert got.tolist() == list(blocks.values())
 
 
 def test_rasterize_matches_center_oracle():

@@ -11,7 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
-from openeo_geotrellis_extensions_spark.core.geom import from_geojson, rectangle_extent
+from openeo_geotrellis_extensions_spark.core import geom
+from openeo_geotrellis_extensions_spark.core.geom import from_geojson
 from openeo_geotrellis_extensions_spark.core.grid import Extent, GlobalGrid, LayoutDefinition
 from openeo_geotrellis_extensions_spark.core.tiles import decode_tiles
 from openeo_geotrellis_extensions_spark.operators.cloud import chunk_polygon
@@ -65,38 +66,22 @@ def _grid(cols, rows):
     return [(c, r) for c in cols for r in rows]
 
 
-# The covers of non-rectangles are those of the classify_rect quadtree the
-# rectangle rule was added beside (tiles touching an edge are boundary).
+# Exact covers of lattice polygons: a tile that no edge crosses is contained
+# when it lies in the closed polygon (even with its edges on the polygon's)
+# and dropped when its open interior misses it — the hole's four tiles too.
+LSHAPE_KEYS = _grid((1, 2, 3), range(1, 7)) + _grid((4, 5, 6), range(4, 7))
+HOLE_KEYS = [k for k in _grid(range(8), range(8)) if k not in _grid((3, 4), (3, 4))]
 NON_RECTANGLES = {
     "bowtie": (
         BOWTIE,
-        _flags(set(), _grid((1, 2, 5, 6), range(1, 7)) + _grid((3, 4), range(2, 6))),
-    ),
-    "lshape": (
-        LSHAPE,
         _flags(
-            {(2, 2), (2, 3), (2, 4), (2, 5), (3, 5), (4, 5), (5, 5)},
-            _grid((1, 2), range(1, 7)) + _grid((3, 4), range(1, 7)) + _grid((5, 6), range(3, 7)),
+            set(_grid((1, 6), range(2, 6)) + _grid((2, 5), (3, 4))),
+            _grid((1, 6), range(1, 7)) + _grid((2, 5), range(2, 6)) + _grid((3, 4), (3, 4)),
         ),
     ),
-    "hole": (
-        HOLE,
-        _flags(
-            set(_grid((1, 6), range(1, 7)) + _grid(range(2, 6), (1, 6))),
-            _grid(range(8), range(8)),
-        ),
-    ),
+    "lshape": (LSHAPE, _flags(set(LSHAPE_KEYS), LSHAPE_KEYS)),
+    "hole": (HOLE, _flags({(c, r) for c, r in HOLE_KEYS if 0 < c < 7 and 0 < r < 7}, HOLE_KEYS)),
 }
-
-
-def test_rectangle_extent_is_exact():
-    assert rectangle_extent(from_geojson(ALIGNED)) == Extent(1, 1, 3, 3)
-    open_cw = _poly([(3, 1), (1, 1), (1, 3), (3, 3)])  # clockwise, unclosed
-    assert rectangle_extent(from_geojson(open_cw)) == Extent(1, 1, 3, 3)
-    collinear = _poly([(1, 1), (2, 1), (3, 1), (3, 3), (1, 3), (1, 1)])
-    multi = json.dumps({"type": "MultiPolygon", "coordinates": [[[[1, 1], [3, 1], [3, 3], [1, 3], [1, 1]]]]})
-    for gj in (BOWTIE, LSHAPE, HOLE, collinear, multi, POINT):
-        assert rectangle_extent(from_geojson(gj)) is None
 
 
 def test_grid_aligned_rectangle_tiles_are_contained(spark):
@@ -120,9 +105,32 @@ def test_world_zone_is_a_few_blocks(spark):
 
 
 @pytest.mark.parametrize("name", sorted(NON_RECTANGLES))
-def test_non_rectangle_cover_keeps_classify_rect(name):
+def test_non_rectangle_cover_is_exact(name):
     gj, want = NON_RECTANGLES[name]
     assert _keys(cover_blocks(from_geojson(gj), LAYOUT8)) == sorted(want)
+
+
+def test_classify_chunks_give_the_same_cover(monkeypatch):
+    """A 4,096-vertex circle classified one block per step (blocks x edges
+    capped at 64) gives the same blocks, and on every tile of the layout the
+    cover agrees with its raster: contained tiles all True, absent tiles
+    all False."""
+    t = np.linspace(0.0, 2 * np.pi, 4096, endpoint=False)
+    ring = np.column_stack([4 + 3.3 * np.cos(t), 4 + 3.3 * np.sin(t)]).tolist()
+    gj = _poly(ring + ring[:1])
+    g = from_geojson(gj)
+    want = cover_blocks(g, LAYOUT8)
+    monkeypatch.setattr(geom, "MAX_CLASSIFY_VALUES", 64)
+    assert cover_blocks(g, LAYOUT8) == want
+    keys = {(c, r): k for c, r, k in _keys(want)}
+    assert 0 < sum(keys.values()) < len(keys) < 64
+    mask_of = pixel_masks({0: gj}, LAYOUT8)
+    for c, r in _grid(range(8), range(8)):
+        m = mask_of(0, c, r, False)
+        if (c, r) not in keys:
+            assert not m.any()
+        elif keys[(c, r)]:
+            assert m.all()
 
 
 # Spatial join cells: features on the world grid, off the cell edges unless
@@ -147,16 +155,17 @@ JOIN_FEATURES = {
 }
 
 # (cells, contained cells, digest) of each feature's sorted (cell, contained)
-# list, as the spatial join's GlobalGrid quadtree (a compact cover of
-# classify_rect, flattened to res) gave them before the cover moved to
-# cover_blocks.
+# list, as the spatial join's GlobalGrid quadtree gave them before the cover
+# moved to cover_blocks, except for the cell-aligned L-shape: its cells along
+# the polygon's edges are now contained, and the cells it only touches are
+# gone.
 JOIN_COVERS = {
     ("lshape", 4): (33, 11, "833f3f9cc9e4ac42"),
     ("lshape", 6): (372, 286, "d661b6ae3c12bf61"),
     ("lshape", 7): (1377, 1205, "57ac34a0042071e8"),
-    ("lshape_aligned", 4): (26, 3, "04ff2a0baa7d858c"),
-    ("lshape_aligned", 6): (359, 252, "ae8c8bf2077f025e"),
-    ("lshape_aligned", 7): (1391, 1172, "9b5b01df206c5475"),
+    ("lshape_aligned", 4): (21, 21, "f272024912242a14"),
+    ("lshape_aligned", 6): (336, 336, "0f5c910466ab1f1b"),
+    ("lshape_aligned", 7): (1344, 1344, "0b98a37fd830a73c"),
     ("hole", 4): (36, 10, "7d6a1f821fc879a4"),
     ("hole", 6): (448, 336, "fb39ebf3d80fa062"),
     ("hole", 7): (1767, 1539, "9e01ecf2e2f36b25"),

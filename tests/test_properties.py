@@ -1,6 +1,9 @@
 """Property-based invariants (hypothesis) for the core math the whole engine
 rests on: grid key round-trips, cell encode/decode, cell-type promotion
-algebra, PIP consistency, tile codec, rectangle feature covers."""
+algebra, PIP consistency, tile codec, feature and spatial join covers."""
+
+import json
+from fractions import Fraction
 
 import numpy as np
 from hypothesis import assume, given, settings
@@ -19,7 +22,6 @@ from openeo_geotrellis_extensions_spark.core.grid import (
     GlobalGrid,
     LayoutDefinition,
 )
-from openeo_geotrellis_extensions_spark.core.geom import rectangle_extent
 from openeo_geotrellis_extensions_spark.core.tiles import (
     MAX_CHUNK_VALUES,
     decode_band,
@@ -28,6 +30,8 @@ from openeo_geotrellis_extensions_spark.core.tiles import (
     encode_tiles,
     tile_chunks,
 )
+from openeo_geotrellis_extensions_spark.operators.cover import cover_blocks, pixel_masks
+from openeo_geotrellis_extensions_spark.operators.spatial_join import cell_blocks
 
 CT_NAMES = ["uint8", "uint8raw", "uint8ud255", "int8", "uint16", "int16",
             "int32", "float32", "float64"]
@@ -242,16 +246,10 @@ def test_rectangle_cover_is_exact(case):
     """A rectangle covers exactly the layout tiles it overlaps with positive
     area, and every tile it calls contained is wholly inside it, with every
     pixel centre in its mask."""
-    import json
-
-    from openeo_geotrellis_extensions_spark.operators.cover import cover_blocks, pixel_masks
-
     layout, ring = case
     gj = json.dumps({"type": "Polygon", "coordinates": [ring]})
     g = from_geojson(gj)
-    rect = rectangle_extent(g)
-    assert rect is not None
-    assert rect.width > 0 and rect.height > 0
+    rect = g.bbox()
     keys = {
         (c, r): k
         for c0, c1, r0, r1, k in cover_blocks(g, layout)
@@ -270,3 +268,151 @@ def test_rectangle_cover_is_exact(case):
         if k:
             assert rect.contains(layout.extent_for_key(c, r))
             assert mask_of(0, c, r, False).all()
+
+
+def _units(lo, hi, lattice):
+    """A coordinate in lattice units: on the lattice, on its quarter
+    lattice, or (unless ``lattice``) off it."""
+    on = st.one_of(st.integers(lo, hi).map(float), st.integers(4 * lo, 4 * hi).map(lambda k: k / 4))
+    return on if lattice else st.one_of(on, st.floats(lo, hi, allow_nan=False, allow_infinity=False))
+
+
+@st.composite
+def _polygon_units(draw, w, h, margin, lattice=False):
+    """The rings, in lattice units, of a random polygon over ``[-margin, w +
+    margin] x [-margin, h + margin]``:
+
+      - a rectilinear skyline (columns of random heights on one base),
+        maybe with a rectangular hole, maybe with a sliver column or a
+        sliver height 1e-12 or 2^-40 units thick;
+      - or a star of 3 to 8 random vertices (maybe self-intersecting);
+
+    maybe turned by 45° (every edge diagonal) within a ``w == h`` square.
+    With ``lattice``, every vertex lies on a dyadic lattice (no free
+    coordinates and no slivers)."""
+    coord_x, coord_y = _units(-margin, w + margin, lattice), _units(-margin, h + margin, lattice)
+    if draw(st.booleans()):
+        ring = [(draw(coord_x), draw(coord_y)) for _ in range(draw(st.integers(3, 8)))]
+        rings = [ring]
+    else:
+        xs = sorted(set(draw(st.lists(coord_x, min_size=2, max_size=5))))
+        assume(len(xs) >= 2)
+        yb = draw(coord_y)
+        hs = draw(st.lists(coord_y, min_size=len(xs) - 1, max_size=len(xs) - 1))
+        eps = 0.0 if lattice else draw(st.sampled_from([0.0, 1e-12, 2.0**-40]))
+        if eps and draw(st.booleans()):
+            xs, hs = [xs[0] - eps] + xs, [hs[0]] + hs  # a sliver column
+        elif eps:
+            hs[0] = yb + eps  # a sliver height
+        assume(all(y > yb for y in hs))
+        ring = [(xs[0], yb), (xs[-1], yb)]
+        for i in reversed(range(len(hs))):
+            ring += [(xs[i + 1], hs[i]), (xs[i], hs[i])]
+        rings = [ring]
+        if draw(st.booleans()):
+            f = st.sampled_from([0.25, 0.5, 0.75])
+            if not lattice:
+                f = st.one_of(f, st.floats(0.01, 0.99))
+            fx, fy = (sorted(draw(st.lists(f, min_size=2, max_size=2))) for _ in "xy")
+            hx = [xs[0] + t * (xs[-1] - xs[0]) for t in fx]
+            hy = [yb + t * (min(hs) - yb) for t in fy]
+            assume(xs[0] < hx[0] < hx[1] < xs[-1] and yb < hy[0] < hy[1] < min(hs))
+            rings.append([(hx[0], hy[0]), (hx[1], hy[0]), (hx[1], hy[1]), (hx[0], hy[1])])
+    if w == h and draw(st.booleans()):
+        rings = [[((x - y) / 2 + h / 2, (x + y) / 2) for x, y in r] for r in rings]
+    return rings
+
+
+def _to_geojson(rings, x0, y0, sx, sy):
+    """A GeoJSON Polygon of lattice-unit ``rings`` on the lattice with
+    origin ``(x0, y0)`` and spacing ``(sx, sy)``."""
+    return json.dumps({"type": "Polygon", "coordinates": [
+        [[x0 + u * sx, y0 + v * sy] for u, v in r + r[:1]] for r in rings
+    ]})
+
+
+@st.composite
+def _polygon_on_layout(draw):
+    cols, rows = draw(st.integers(1, 6)), draw(st.integers(1, 6))
+    ox, oy = draw(st.integers(-5, 5)), draw(st.integers(-5, 5))
+    tw, th = draw(st.sampled_from([0.5, 1.0, 1.5, 3.0])), draw(st.sampled_from([0.5, 1.0, 2.0]))
+    px = draw(st.sampled_from([1, 2, 5]))
+    layout = LayoutDefinition(Extent(ox, oy, ox + cols * tw, oy + rows * th), cols, rows, px, px)
+    rings = draw(_polygon_units(cols, rows, 2))
+    return layout, _to_geojson(rings, ox, oy, tw, th)
+
+
+def _meets_open_box(p, q, e):
+    """Exact, in rationals: does segment ``p``-``q`` meet the open box ``e``?"""
+    t0, t1 = Fraction(0), Fraction(1)
+    for a, b, lo, hi in ((p[0], q[0], e.xmin, e.xmax), (p[1], q[1], e.ymin, e.ymax)):
+        a, b, lo, hi = map(Fraction, (a, b, lo, hi))
+        if a == b:
+            if not lo < a < hi:
+                return False
+            continue
+        ta, tb = (lo - a) / (b - a), (hi - a) / (b - a)
+        t0, t1 = max(t0, min(ta, tb)), min(t1, max(ta, tb))
+    return t0 < t1
+
+
+@given(_polygon_on_layout())
+@settings(max_examples=300, deadline=None)
+def test_polygon_cover_is_exact(case):
+    """Over rectilinear polygons with and without holes, 45° diagonals,
+    stars and slivers, on and off the tile lattice: a contained tile's
+    pixel centres all lie in the polygon, an absent tile's lie all outside
+    it, and every boundary tile has an edge crossing its open interior."""
+    layout, gj = case
+    g = from_geojson(gj)
+    keys = {
+        (c, r): k
+        for c0, c1, r0, r1, k in cover_blocks(g, layout)
+        for c in range(c0, c1 + 1)
+        for r in range(r0, r1 + 1)
+    }
+    edges = [(a, b) for poly in g.polygons for ring in poly for a, b in zip(ring[:-1], ring[1:])]
+    mask_of = pixel_masks({0: gj}, layout)
+    for c in range(layout.layout_cols):
+        for r in range(layout.layout_rows):
+            m = mask_of(0, c, r, False)
+            if (c, r) not in keys:
+                assert not m.any()
+            elif keys[(c, r)]:
+                assert m.all()
+            else:
+                e = layout.extent_for_key(c, r)
+                assert any(_meets_open_box(p, q, e) for p, q in edges)
+
+
+@given(st.integers(2, 4), st.data())
+@settings(max_examples=100, deadline=None)
+def test_join_cover_agrees_with_points_in_geometry(res, data):
+    """The spatial join's cells are half-open: a point on a cell's west or
+    south edge lies in it. Random points, and for polygons on the lattice
+    also quarter-cell lattice points, in a contained non-border cell lie in
+    the polygon, and those in an absent cell lie outside it, by
+    ``points_in_geometry`` (which counts a point on the polygon's boundary
+    as if nudged up and right, into the open part of its cell; its float
+    ray cast is exact there only for lattice polygons)."""
+    nx, ny = GlobalGrid.n_cells(res)
+    size = GlobalGrid.cell_size(res)
+    lattice = data.draw(st.booleans())
+    rings = data.draw(_polygon_units(ny, ny, 0, lattice))
+    shift = data.draw(st.integers(0, nx - ny))
+    g = from_geojson(_to_geojson(rings, -180.0 + shift * size, -90.0, size, size))
+    state = np.full((ny, nx), -1)  # by layout (row, col): absent, boundary, contained
+    for c0, c1, r0, r1, k in cell_blocks(g, res):
+        state[r0 : r1 + 1, c0 : c1 + 1] = k
+    rng = np.random.default_rng(data.draw(st.integers(0, 2**32 - 1)))
+    xs, ys = rng.uniform(-180, 180, 500), rng.uniform(-90, 90, 500)
+    if lattice:
+        gx, gy = np.meshgrid(np.arange(4 * nx + 1) * size / 4 - 180, np.arange(4 * ny + 1) * size / 4 - 90)
+        xs, ys = np.concatenate([gx.ravel(), xs]), np.concatenate([gy.ravel(), ys])
+    _, cx, cy = GlobalGrid.decode(GlobalGrid.cell_for_point(res, xs, ys))
+    row = ny - 1 - cy
+    k = state[row, cx]
+    inner = (cx > 0) & (cx < nx - 1) & (row > 0) & (row < ny - 1)
+    pip = points_in_geometry(g, xs, ys)
+    assert pip[(k == 1) & inner].all()
+    assert not pip[k == -1].any()
